@@ -8,9 +8,11 @@ Parquet, where schema, column pruning and predicate pushdown are native.
 from __future__ import annotations
 
 import os
+import stat
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: The driver-generated star schema (TESTDATA.md).
 STAR_TABLES = (
@@ -29,12 +31,48 @@ STAR_TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: Session settings that change the schema Spark infers from a parquet
+#: footer; they are part of the schema memo's key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: (abspath, inode, mtime_ns, size, conf values) -> inferred StructType
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, memoized per file
+    version and schema-relevant session settings: inference fires one
+    Spark job per read, a supplied schema none. None for anything but a
+    local regular file (directories, URIs), which are inferred per read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    key = (
+        os.path.abspath(path), st.st_ino, st.st_mtime_ns, st.st_size,
+        *(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one parquet table from a scale-factor directory.
 
     TIMESTAMP(NANOS) parquet columns arrive as long nanos (see
     session.SCALE_DEFAULTS) and are converted to TIMESTAMP_NTZ at
-    micro precision, truncating like DuckDB/Arrow do.
+    micro precision, truncating like DuckDB/Arrow do. The inferred
+    schema is memoized (``_parquet_schema``), so only the first load of
+    a file version pays the inference job.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -43,7 +81,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Self-sufficient under ANY session (e.g. a driver-created one
         # without our defaults): nanosAsLong is runtime-settable.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _parquet_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn(
             "ts",

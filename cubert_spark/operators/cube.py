@@ -9,13 +9,25 @@ identical ancestor enumeration, and partial->final hash aggregation
 distributed and memory-safe, so none of that machinery is reimplemented.
 
 Non-additive measures: Cubert computes exact COUNT(DISTINCT m) and
-exact percentiles per cuboid via INNER dimensions — the block is
-partitioned+sorted on the inner dim so each (ancestor, member)
-contributes once (CubeOperator.java:223-292,
-CountDistinctCubeAggregator.java:25). Catalyst's distinct-aggregate
-rewrite is the same two-phase Expand (group by dims+m, then re-agg),
-so ``count_distinct`` measures Just Work, as do exact percentiles via
-``percentile``.
+exact percentiles per cuboid via INNER dimensions — an inner
+aggregation at the finest grain, then an outer one per ancestor
+cuboid, so each (ancestor, member) contributes once
+(CubeOperator.java:223-292, CountDistinctCubeAggregator.java:25).
+Catalyst's distinct-aggregate rewrite is the same two-phase Expand
+(group by dims+m, then re-agg), so ``count_distinct`` measures Just
+Work. Exact percentiles take the same inner/outer shape here
+explicitly: when every aggregate is a ``PERCENTILE`` / ``MEDIAN_SUM``
+/ ``COUNT`` tuple spec over one measure ``m``, the inner level is a
+codegen'd ``groupBy(dims + [m]).count()`` histogram and the outer
+level is the cuboid aggregation over it, ``percentile(m, p, freq)``
+and ``sum(freq)``. Spark's ``percentile`` buffer is already a
+value->count map, so the answers are bit-identical to the one-level
+``percentile`` over raw rows, while the Expand multiplies histogram
+rows (about |dims| x |distinct m|) instead of fact rows. The cost is
+a second, histogram-sized shuffle. Any other aggregate list, or an
+opaque ``Column`` (e.g. ``percentile_approx``), keeps the one-level
+plan. One contract difference: ``groupBy`` normalizes floating keys,
+so a ``-0.0`` measure counts as ``0.0`` and every NaN as one NaN.
 
 Null semantics: rolled-up dimensions surface as NULL with
 ``grouping(col)`` = 1, the standard SQL convention Cubert also follows
@@ -28,12 +40,12 @@ Cubert *rejects* real NULLs in dimension values (CubeDimensions.java:
 from __future__ import annotations
 
 from itertools import combinations
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
-from cubert_spark.operators.groupby import agg_column
+from cubert_spark.operators.groupby import agg_column, split_spec
 
 
 def _cols(names: Sequence[str | Column]) -> list[Column]:
@@ -53,6 +65,60 @@ def _check_null_dims(df: DataFrame, dims: Sequence[str]) -> DataFrame:
     return df.withColumn("__cube_guard", guard).filter("__cube_guard").drop("__cube_guard")
 
 
+#: Frequency column of the two-level plan's inner histogram.
+_FREQ = "__cube_freq"
+
+
+def _histogram_plan(
+    df: DataFrame, keys: Sequence[str | Column], aggregates: tuple
+) -> tuple[DataFrame, list[Column]] | None:
+    """The two-level percentile plan's inner histogram and outer
+    aggregates, or None when ``aggregates`` are not all PERCENTILE /
+    MEDIAN_SUM / COUNT tuple specs over one measure column."""
+    measure, outer = None, []
+    for spec in aggregates:
+        if not isinstance(spec, tuple):
+            return None
+        kind, col, params, alias = split_spec(spec)
+        if kind == "COUNT":
+            outer.append(F.sum(_FREQ).alias(alias))
+        elif (
+            kind in ("PERCENTILE", "MEDIAN_SUM")
+            and isinstance(col, str)
+            and measure in (None, col)
+        ):
+            measure = col
+            p = params[0] if params else 0.5
+            outer.append(F.percentile(F.col(col), F.lit(p), F.col(_FREQ)).alias(alias))
+        else:
+            return None
+    if measure is None:
+        return None
+    # plain top-level columns only: the outer level re-reads the keys by
+    # name from the histogram
+    cols = set(df.columns)
+    if measure not in cols or not all(isinstance(k, str) and k in cols for k in keys):
+        return None
+    inner = list(dict.fromkeys([*keys, measure]))
+    hist = df.groupBy(*inner).agg(F.count(F.lit(1)).alias(_FREQ))
+    return hist, outer
+
+
+def _aggregate(
+    df: DataFrame,
+    keys: Sequence[str | Column],
+    group: Callable[[DataFrame], GroupedData],
+    aggregates: tuple,
+) -> DataFrame:
+    """``group(df).agg(aggregates)``, through the two-level histogram
+    plan when the aggregates allow it."""
+    plan = _histogram_plan(df, keys, aggregates)
+    if plan is not None:
+        hist, outer = plan
+        return group(hist).agg(*outer)
+    return group(df).agg(*[agg_column(a) for a in aggregates])
+
+
 def cube(
     df: DataFrame,
     dims: Sequence[str],
@@ -62,7 +128,7 @@ def cube(
     """``CUBE x BY dims AGGREGATES ...`` — full 2^n cuboids."""
     if reject_null_dims:
         df = _check_null_dims(df, dims)
-    return df.cube(*_cols(dims)).agg(*[agg_column(a) for a in aggregates])
+    return _aggregate(df, dims, lambda d: d.cube(*_cols(dims)), aggregates)
 
 
 def rollup(
@@ -71,7 +137,7 @@ def rollup(
     *aggregates: str | tuple | Column,
 ) -> DataFrame:
     """``CUBE ... ROLLUPS (...)`` — hierarchical prefixes."""
-    return df.rollup(*_cols(dims)).agg(*[agg_column(a) for a in aggregates])
+    return _aggregate(df, dims, lambda d: d.rollup(*_cols(dims)), aggregates)
 
 
 def grouping_sets(
@@ -90,8 +156,8 @@ def grouping_sets(
             if d not in all_dims:
                 all_dims.append(d)
     gs = [_cols(s) for s in sets]
-    return df.groupingSets(gs, *_cols(all_dims)).agg(
-        *[agg_column(a) for a in aggregates]
+    return _aggregate(
+        df, all_dims, lambda d: d.groupingSets(gs, *_cols(all_dims)), aggregates
     )
 
 

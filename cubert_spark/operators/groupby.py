@@ -42,23 +42,36 @@ AGGS: dict[str, Callable[..., Column]] = {
 }
 
 
+def split_spec(spec: tuple) -> tuple[str, str | Column, list, str]:
+    """``(AGG_NAME, input_col, *params[, alias])`` -> (upper-cased name,
+    input, params, alias). Only PERCENTILE takes a parameter, its rank
+    fraction. The alias defaults to ``name_col``."""
+    name, col, *rest = spec
+    key = name.upper()
+    if key not in AGGS:
+        raise KeyError(f"unknown aggregation {name!r}")
+    n = 1 if key == "PERCENTILE" else 0
+    if len(rest) < n:
+        raise ValueError(f"{key} takes {n} parameter(s) after its input: {spec!r}")
+    params, rest = rest[:n], rest[n:]
+    alias = rest[0] if rest else f"{name.lower()}_{col}"
+    return key, col, params, alias
+
+
 def agg_column(spec: str | tuple | Column) -> Column:
     """Build one aggregate Column.
 
     Accepts a Column, or a tuple ``(AGG_NAME, input_col[, alias])``
     mirroring Cubert's ``AGGREGATES SUM(col) AS alias`` clause
-    (grammar CubertPhysical.g4:51-53).
+    (grammar CubertPhysical.g4:51-53); PERCENTILE carries its rank
+    fraction after the input: ``("PERCENTILE", col, p[, alias])``.
     """
     if isinstance(spec, Column):
         return spec
     if isinstance(spec, str):
         return F.expr(spec)
-    name, col, *rest = spec
-    fn = AGGS.get(name.upper())
-    if fn is None:
-        raise KeyError(f"unknown aggregation {name!r}")
-    c = fn(F.col(col) if isinstance(col, str) else col)
-    alias = rest[0] if rest else f"{name.lower()}_{col}"
+    key, col, params, alias = split_spec(spec)
+    c = AGGS[key](F.col(col) if isinstance(col, str) else col, *params)
     return c.alias(alias)
 
 

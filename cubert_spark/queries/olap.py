@@ -193,13 +193,18 @@ def q_cube_median(spark: SparkSession, sf: str) -> DataFrame:
     MedianFlattenOperator.java:31, the partitioned-additive machinery
     of CubeOperator.java:223-292).
 
-    Spark spelling: ``cube(dims).agg(percentile(...))`` — Catalyst's
-    Expand enumerates the 2^n cuboids (same ancestor set as
-    CubeDimensions.ancestors()) and the non-additive percentile runs
-    once per (cuboid, group) after a single shuffle of the expanded
-    rows. At 100 TB the Expand multiplies scan output by 2^n — with
-    n=2 dims that is a 4x shuffle, the same blow-up the reference
-    pays via its OLAP_CUBE count rewriting; for high-arity cubes use
+    Spark spelling: Cubert tuple specs (``MEDIAN_SUM``, ``PERCENTILE``,
+    ``COUNT``), which ``operators.cube`` plans in two levels like
+    CubeOperator.java:223-292: an inner codegen'd histogram
+    ``groupBy(dims, l_quantity).count()`` at the finest grain, then
+    the outer cuboid aggregation over it — Catalyst's Expand
+    enumerates the 2^n cuboids (same ancestor set as
+    CubeDimensions.ancestors()) of the HISTOGRAM rows, and
+    ``percentile(l_quantity, p, freq)`` runs once per (cuboid,
+    group). The Expand multiplies ~|groups| x 50 histogram rows
+    instead of the fact rows, and the second shuffle carries only the
+    histogram. Bit-identical to ``percentile`` over raw rows, whose
+    buffer is the same value->count map. For high-arity cubes use
     ``grouping_combos(max_arity)`` to cap the cuboid set.
 
     l_quantity is integral-valued, so midpoint interpolation at the
@@ -218,9 +223,9 @@ def q_cube_median(spark: SparkSession, sf: str) -> DataFrame:
     return cube(
         li,
         ["l_returnflag", "l_linestatus"],
-        F.percentile("l_quantity", F.lit(0.5)).alias("median_qty"),
-        F.percentile("l_quantity", F.lit(0.75)).alias("p75_qty"),
-        F.count(F.lit(1)).alias("n"),
+        ("MEDIAN_SUM", "l_quantity", "median_qty"),
+        ("PERCENTILE", "l_quantity", 0.75, "p75_qty"),
+        ("COUNT", "*", "n"),
     )
 
 
@@ -238,14 +243,14 @@ def q_grouping_sets_median(spark: SparkSession, sf: str) -> DataFrame:
     """Exact percentile over explicit GROUPING SETS (the reference's
     grammar also admits median measures under GROUPING SETS /
     ROLLUPS — CubertPhysical.g4:114). Folded twin of ``cube_median``:
-    same Expand + non-additive percentile machinery, explicit set
-    list instead of the full 2^n."""
+    same two-level histogram + Expand plan, explicit set list instead
+    of the full 2^n."""
     li = load_table(spark, sf, "lineitem")
     return grouping_sets(
         li,
         [["l_returnflag", "l_linestatus"], ["l_linestatus"], []],
-        F.percentile("l_quantity", F.lit(0.5)).alias("median_qty"),
-        F.count(F.lit(1)).alias("n"),
+        ("MEDIAN_SUM", "l_quantity", "median_qty"),
+        ("COUNT", "*", "n"),
     )
 
 

@@ -1,0 +1,70 @@
+"""``catalog.load_table``'s schema memo: one inference job per file
+version and schema-relevant session settings, none after that."""
+
+from __future__ import annotations
+
+import time
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from cubert_spark.catalog import load_table
+
+
+def _in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _jobs_in(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it fired. The status tracker
+    is fed asynchronously by the listener bus, in order, so once a later
+    sentinel job is visible every job ``fn`` fired is visible too."""
+    out = _in_group(spark, group, fn)
+    sentinel = f"{group}-sentinel"
+    _in_group(spark, sentinel, lambda: spark.range(1).count())
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_repeated_load_fires_no_job(spark, tmp_path):
+    pq.write_table(pa.table({"k": [1, 2, 3]}), tmp_path / "t.parquet")
+    first, n_first = _jobs_in(spark, "memo-first", lambda: load_table(spark, str(tmp_path), "t"))
+    again, n_again = _jobs_in(spark, "memo-again", lambda: load_table(spark, str(tmp_path), "t"))
+    assert n_first == 1 and n_again == 0
+    assert again.schema == first.schema
+    assert sorted(r.k for r in again.collect()) == [1, 2, 3]
+
+
+def test_rewritten_file_is_reinferred(spark, tmp_path):
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["k"]
+    time.sleep(0.01)  # a distinct mtime even on coarse-clock filesystems
+    pq.write_table(pa.table({"k": ["x"], "extra": [1.5]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "extra"]
+    assert df.schema["k"].dataType.simpleString() == "string"
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_memo_keyed_on_schema_settings(spark, tmp_path):
+    """binaryAsString changes the inferred type of a binary column, so
+    a load under the other setting must not reuse the memoized schema."""
+    pq.write_table(pa.table({"b": pa.array([b"ab"], pa.binary())}), tmp_path / "t.parquet")
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert load_table(spark, str(tmp_path), "t").schema["b"].dataType.simpleString() == "binary"
+        spark.conf.set(key, "true")
+        assert load_table(spark, str(tmp_path), "t").schema["b"].dataType.simpleString() == "string"
+    finally:
+        spark.conf.set(key, before)

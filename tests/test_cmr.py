@@ -141,6 +141,37 @@ def test_cube_grouping_sets_script(spark):
     assert len(got) == 3 + 2 + 1
 
 
+def test_cube_median_script_two_level(spark):
+    """MEDIAN_SUM + COUNT under a script CUBE take the two-level
+    histogram plan (inner count per dims + measure below the Expand)
+    and return exact medians for every cuboid."""
+    import statistics
+
+    from cubert_spark.plans import explain_str
+
+    rows = [("a", "x", 1), ("a", "x", 4), ("a", "y", 2), ("b", "x", 4),
+            ("b", "x", 9), ("b", "y", 3), ("a", "x", 1)]
+    d = spark.createDataFrame(rows, "d1 string, d2 string, v int")
+    script = """
+    JOB "cube"
+      REDUCE {
+        c = CUBE d BY d1, d2 AGGREGATES [MEDIAN_SUM(v) AS med, COUNT(v) AS n];
+      }
+    END
+    """
+    env = run_script(spark, script, relations={"d": d})
+    plan = explain_str(env["c"], mode="simple")
+    assert "count(1)" in plan[plan.index("Expand"):], plan
+    got = {(r["d1"], r["d2"]): (r["med"], r["n"]) for r in env["c"].collect()}
+    want = {}
+    for k1 in ("a", "b", None):
+        for k2 in ("x", "y", None):
+            vs = [v for a, b, v in rows if k1 in (a, None) and k2 in (b, None)]
+            if vs:
+                want[(k1, k2)] = (float(statistics.median(vs)), len(vs))
+    assert got == want
+
+
 def test_multi_map_blocks_union(spark, tmp_path):
     """Two MAP clauses feeding one shuffle = MultiMapperSplit: the
     second LOAD of the same relation name unions into the first."""
