@@ -20,7 +20,7 @@ execution. This package exposes:
   reference is batch-only, SURVEY.md §2.10).
 - ``datapipe``    — large-scale training-data pipeline ops: dedup
   (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding cosine),
-  similarity search, text analysis, multimodal column plumbing.
+  similarity search, text analysis, binary-blob metadata.
 
 Every operator is written for 100 TB scale: declarative DataFrame plans
 (Catalyst does pushdown/pruning/join planning), broadcast for small

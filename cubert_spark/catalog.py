@@ -174,7 +174,7 @@ def resolve_latest(path: str) -> str:
 
 def load(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     fmt: str = "parquet",
     schema: str | None = None,
     **options: str,
@@ -212,6 +212,7 @@ def load_date_range(
     start: str,
     end: str,
     fmt: str = "parquet",
+    schema: str | None = None,
     **options: str,
 ) -> DataFrame:
     """Cubert date-range LOAD: ``LOAD "(path, startDate, endDate)"``
@@ -219,6 +220,8 @@ def load_date_range(
     datasets. ``path_pattern`` contains ``{date}`` substituted with
     yyyy-MM-dd for each day in [start, end]; missing days are skipped
     (the reference tolerates absent daily folders via #LATEST tags).
+    The day paths are read by :func:`load`, so ``fmt`` and ``schema``
+    follow the same rules as a single-path LOAD.
     """
     import datetime as dt
     import glob as _glob
@@ -238,8 +241,7 @@ def load_date_range(
         cur += dt.timedelta(days=1)
     if not paths:
         raise FileNotFoundError(f"no inputs for {path_pattern} in [{start}, {end}]")
-    fmt = {"text": "csv", "rubix": "parquet"}.get(fmt.lower(), fmt.lower())
-    return spark.read.format(fmt).options(**options).load(paths)
+    return load(spark, paths, fmt, schema, **options)
 
 
 def store(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite", **options: str) -> None:

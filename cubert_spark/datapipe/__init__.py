@@ -5,11 +5,6 @@ star; beyond the reference's surface).
 - ``similarity`` — embedding cosine top-k (exact + fast paths).
 - ``textstats``  — token counts, quality scores, language ID,
   document fingerprints.
-- ``multimodal`` — opaque binary columns with typed metadata; REAL
-  pure-spec decode for six image formats (BMP/JPEG/PNG/GIF/TIFF/
-  Netpbm), WAV/FLAC/G.711/ADPCM audio, MJPEG-AVI + animated-GIF
-  video frames; pHash near-dup, spectral audio features; codecs that
-  genuinely need external libraries stay honest stubs.
 - ``components`` — connected components over near-dup pair graphs
   (pairs → duplicate clusters with a representative).
 - ``sampling``   — deterministic hash-keyed sampling / train-test
@@ -19,6 +14,10 @@ star; beyond the reference's surface).
 - ``sketches``   — deterministic HyperLogLog, Count-Min, KMV set
   algebra.
 - ``bpe``        — bounded-deterministic BPE train + Arrow apply.
+
+Media decode (image/audio/video) is out of scope: binary columns get
+a JVM-side metadata pass only (length + content hash, the
+``multimodal_meta`` query); decoding belongs in a codec library.
 
 Determinism doctrine: every hash used for bucketing/signatures is
 md5-based (cross-engine reproducible), never engine-internal hash().
@@ -31,7 +30,6 @@ from cubert_spark.datapipe import (  # noqa: F401
     components,
     curation,
     dedup,
-    multimodal,
     sampling,
     similarity,
     sketches,

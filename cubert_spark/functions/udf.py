@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator, Sequence
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -32,9 +33,13 @@ def grouped_agg_udaf(fn: Callable, return_type: str):
 
     >>> gmean = grouped_agg_udaf(lambda s: float(np.exp(np.log(s).mean())), "double")
     """
-    from pyspark.sql.functions import PandasUDFType
 
-    return pandas_udf(fn, return_type, functionType=PandasUDFType.GROUPED_AGG)
+    # the Series -> scalar hints make pandas_udf infer GROUPED_AGG (the
+    # PandasUDFType argument is deprecated)
+    def agg(s: pd.Series) -> object:
+        return fn(s)
+
+    return pandas_udf(agg, return_type)
 
 
 def cube_udaf(

@@ -17,7 +17,6 @@ from cubert_spark.datapipe import (
     similarity,
     textstats,
 )
-from cubert_spark.datapipe.multimodal import attach_blob_metadata, text_as_blob
 from cubert_spark.checkpoints import eager_checkpoint, lazy_checkpoint
 
 _EMB_DIM = 64  # testdata embeddings dimension (TESTDATA.md)
@@ -1014,10 +1013,30 @@ FROM embeddings WHERE vec_id < 5
 """
 
 
+def attach_blob_metadata(df: DataFrame, blob_col: str, id_col: str) -> DataFrame:
+    """Typed metadata for an opaque binary column — JVM-side only
+    (length, content hash); the cheap pass that runs before any
+    Python decode at scale."""
+    b = F.col(blob_col)
+    return df.select(
+        F.col(id_col),
+        F.length(b).cast("int").alias("byte_len"),
+        F.sha2(b, 256).alias("sha256"),
+    )
+
+
+def text_as_blob(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Test adapter: UTF-8 encode a text column into a binary column so
+    the multimodal plumbing is exercisable on the documents table."""
+    return df.select(
+        F.col(id_col).alias("id"), F.encode(F.col(text_col), "UTF-8").alias("blob")
+    )
+
+
 def q_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
-    """Binary-column plumbing: blob byte length + content hash (the
-    JVM-side metadata pass; decode kernels are stubbed, tested in
-    tests/test_datapipe.py)."""
+    """Binary-column plumbing: blob byte length + content hash, the
+    JVM-side metadata pass over documents encoded as blobs. Media
+    decode itself is out of scope; it belongs in a codec library."""
     d = load_table(spark, sf, "documents")
     return attach_blob_metadata(text_as_blob(d), "blob", "id")
 

@@ -212,6 +212,7 @@ def run_plan(
                         _iso(p["start"]),
                         _iso(p["end"]),
                         fmt=inp.get("format", "parquet"),
+                        schema=inp.get("schema"),
                         **inp.get("options", {}),
                     )
                 )

@@ -25,6 +25,7 @@ trillion-row virtual input is as cheap as a small one.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import uuid
 from dataclasses import dataclass
@@ -154,13 +155,22 @@ class AvroDataSource(DataSource):
         return "cubert_avro"
 
     def _paths(self):
-        path = self.options.get("path")
-        if not path:
+        # Spark hands one load path over as ``path`` and several (a
+        # date-range LOAD) as ``paths``, a JSON array
+        if self.options.get("paths"):
+            roots = json.loads(self.options["paths"])
+        elif self.options.get("path"):
+            roots = [self.options["path"]]
+        else:
             raise ValueError("cubert_avro requires a path")
-        _assert_local(path, "cubert_avro")
-        if os.path.isdir(path):
-            return sorted(glob.glob(os.path.join(path, "*.avro")))
-        return sorted(glob.glob(path)) or [path]
+        files = []
+        for path in roots:
+            _assert_local(path, "cubert_avro")
+            if os.path.isdir(path):
+                files += sorted(glob.glob(os.path.join(path, "*.avro")))
+            else:
+                files += sorted(glob.glob(path)) or [path]
+        return files
 
     def schema(self) -> str:
         from cubert_spark import avroio
@@ -170,7 +180,7 @@ class AvroDataSource(DataSource):
         paths = self._paths()
         if not paths:
             raise avroio.AvroError(
-                f"no .avro files found at {self.options.get('path')!r}"
+                f"no .avro files found at {self.options.get('paths') or self.options.get('path')!r}"
             )
         with open(paths[0], "rb") as f:
             file_schema, _, _ = avroio.read_header(f)

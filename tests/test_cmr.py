@@ -358,6 +358,20 @@ def test_date_range_load(spark, tmp_path):
     env = run_script(spark, script)
     assert {r["d"] for r in env["x"].collect()} == {"20240101", "20240102"}
 
+    # the input's schema reaches the date-range branch too
+    for day in ("20240101", "20240103"):
+        (tmp_path / "text" / day).mkdir(parents=True)
+        (tmp_path / "text" / day / "part.txt").write_text(f"w{day}\t7\n")
+    script = f"""
+    JOB "range_text"
+      MAP {{
+        t = LOAD ("{tmp_path}/text", 20240101, 20240102) USING TEXT("schema": "STRING w, INT c");
+      }}
+    END
+    """
+    env = run_script(spark, script)
+    assert [tuple(r) for r in env["t"].collect()] == [("w20240101", 7)]
+
 
 def test_multi_job_dataflow(spark, tmp_path):
     """Job 2 LOADs job 1's STORE output — the reference's inter-job

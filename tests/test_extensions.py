@@ -35,6 +35,19 @@ def test_grouped_agg_udaf(spark):
     assert got["b"] == pytest.approx(9.0)
 
 
+def test_grouped_agg_udaf_built_from_type_hints():
+    """No deprecated PandasUDFType: the UDAF type comes from the hints,
+    so building one raises no pyspark deprecation warning."""
+    import warnings
+
+    from pyspark.util import PythonEvalType
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        total = grouped_agg_udaf(lambda s: float(s.sum()), "double")
+    assert total.evalType == PythonEvalType.SQL_GROUPED_AGG_PANDAS_UDF
+
+
 def test_cube_udaf(spark):
     import numpy as np
 
@@ -171,6 +184,40 @@ def test_python_datasources(spark, tmp_path):
     df = spark.createDataFrame([("blue",), ("red",)], "color string")
     enc = encode(df, d, ["color"])
     assert sorted(r["color"] for r in enc.collect()) == [1, 2]
+
+
+def test_active_session_pin_in_worker_thread(spark, tmp_path):
+    """The private JVM call behind ``ensure_active_session`` (which
+    swallows its failures for Spark Connect) must keep working: the
+    ``.cmr`` runner's worker threads read Python DataSources through it.
+    A Spark upgrade that moves the class fails here, not silently."""
+    import threading
+
+    from cubert_spark.catalog import load, store
+    from cubert_spark.session import ensure_active_session
+
+    out = str(tmp_path / "pinned")
+    store(spark.range(3), out, fmt="avro")
+    seen: dict = {}
+
+    def worker() -> None:
+        try:
+            jvm_session = spark._jvm.org.apache.spark.sql.classic.SparkSession
+            jvm_session.setActiveSession(spark._jsparkSession)
+            seen["active"] = jvm_session.getActiveSession().get()
+            ensure_active_session(spark)
+            seen["ids"] = sorted(r.id for r in load(spark, out, fmt="avro").collect())
+        except Exception as e:  # noqa: BLE001 - re-raised below
+            seen["error"] = e
+
+    t = threading.Thread(target=worker)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    if "error" in seen:
+        raise seen["error"]
+    assert seen["active"].equals(spark._jsparkSession)
+    assert seen["ids"] == [0, 1, 2]
 
 
 def test_join_delta_algebra(spark):

@@ -69,6 +69,36 @@ def test_load_date_range(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         load_date_range(spark, str(tmp_path / "daily/{date}"), "2024-02-01", "2024-02-03")
 
+    # the day paths follow single-path LOAD's format rules: TEXT is
+    # tab-separated and takes a schema, AVRO routes to cubert_avro
+    from cubert_spark.catalog import store
+
+    for day, n in [("2024-01-01", 2), ("2024-01-02", 3)]:
+        (tmp_path / f"text/{day}").mkdir(parents=True)
+        (tmp_path / f"text/{day}/part.txt").write_text(
+            "".join(f"{day}\t{i}\n" for i in range(n))
+        )
+        store(
+            spark.range(n).selectExpr("CAST(id AS INT) AS c", f"'{day}' AS day"),
+            str(tmp_path / f"avro/{day}"),
+            fmt="avro",
+        )
+    text = load_date_range(
+        spark, str(tmp_path / "text/{date}"), "2024-01-01", "2024-01-03",
+        fmt="text", schema="STRING w, INT c",
+    )
+    assert text.columns == ["w", "c"]
+    assert sorted(tuple(r) for r in text.collect()) == [
+        ("2024-01-01", 0), ("2024-01-01", 1),
+        ("2024-01-02", 0), ("2024-01-02", 1), ("2024-01-02", 2),
+    ]
+    avro = load_date_range(
+        spark, str(tmp_path / "avro/{date}"), "2024-01-01", "2024-01-03", fmt="avro"
+    )
+    assert sorted((r.day, r.c) for r in avro.collect()) == sorted(
+        (r.w, r.c) for r in text.collect()
+    )
+
 
 def test_profile_skew_values(spark):
     from pyspark.sql import functions as F
