@@ -9,25 +9,31 @@ new fact days, using presence bitmaps per member over the date window.
 
 Spark-first translation:
 
-- A **SummaryStore** materializes two parquet tables, partitioned by
-  day (the partition column enables pruning — reading a date range
-  scans only its days):
-  * ``additive``: per (day, dims) partials — SUM/COUNT/MIN/MAX are
-    re-aggregable (sum of sums, min of mins ...).
-  * ``members``:  per (day, dims, member) distinct rows — the
-    partitioned-additive property Cubert encodes as bitmaps: an exact
-    COUNT(DISTINCT member) over any day range is countDistinct over
-    the summary rows of that range. (The bitmap is a storage
-    optimization of exactly this relation; parquet dictionary+RLE
-    gets most of that compression for free.)
+- A **SummaryStore** materializes ONE parquet table at
+  (day, dims[, member]) grain carrying the additive partials
+  (SUM/COUNT/MIN/MAX: sum of sums, min of mins ...), sorted by day so
+  row-group stats prune a date range. Keeping the member in the key is
+  the partitioned-additive property Cubert encodes as presence
+  bitmaps: an exact COUNT(DISTINCT member) over any day range is
+  countDistinct over the summary rows of that range. (The bitmap is a
+  storage optimization of exactly this relation; parquet
+  dictionary+RLE gets most of that compression for free.) Without a
+  ``distinct_col`` the grain is (day, dims).
 - ``incremental_update`` appends only days missing from the store
-  (the SummaryRewriter delta logic; overwrite-by-partition).
-- ``rewrite`` answers a (date-range, dims, aggs) query from the
-  summary, splicing fact days not yet summarized — byte-equal to
-  running the query directly on the fact table.
+  (the SummaryRewriter delta logic) in one write job, so a failed
+  update leaves the store as it was.
+- ``rewrite`` answers a (date-range, dims, aggs) query with one
+  aggregation over the in-range summary rows unioned with the
+  partials of fact days not yet summarized.
+
+Exactness: SUM over DECIMAL or integral columns, COUNT, MIN, MAX and
+COUNT(DISTINCT) re-aggregate to exactly the direct aggregation at any
+grain. A SUM over a DOUBLE column is a sum of partial sums, so it
+matches the direct SUM only up to floating-point summation order;
+cast the measure to DECIMAL for an exact answer.
 
 At 100 TB: the fact scan happens once per new day; every reporting
-query over a trailing window reads only |days| x |dims| summary rows.
+query over a trailing window reads only the summary rows of its days.
 """
 
 from __future__ import annotations
@@ -40,10 +46,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: Additive measures: (summary column suffix, partial fn, merge fn)
+#: Additive measures: AGG -> (partial fn, merge fn). A COUNT over no
+#: rows is 0, not the NULL a SUM of no partials gives.
 _ADDITIVE = {
     "SUM": (F.sum, F.sum),
-    "COUNT": (lambda c: F.count(F.lit(1)), F.sum),
+    "COUNT": (lambda c: F.count(F.lit(1)), lambda c: F.coalesce(F.sum(c), F.lit(0))),
     "MIN": (F.min, F.min),
     "MAX": (F.max, F.max),
 }
@@ -83,7 +90,7 @@ def _day(col: Column) -> Column:
 
 class SummaryStore:
     """Materialized daily summary at ``path`` (CubertMD-style metadata
-    in meta.json next to the parquet tables)."""
+    in meta.json next to the parquet table)."""
 
     def __init__(
         self,
@@ -115,112 +122,93 @@ class SummaryStore:
             with open(meta, "w") as f:
                 f.write(spec.to_json())
         self.spec = spec
-        #: Summary tables are compact by design (days x dims [x member
-        #: for the distinct side]); writing them at full shuffle width
-        #: scatters a small table over many tiny files, and every
-        #: rewrite pays the per-file open cost back (30% of build+query
-        #: measured at sf0.1). Set to None for a summary whose member
-        #: table is genuinely large.
+        #: The summary table is compact by design (days x dims [x
+        #: member]); writing it at full shuffle width scatters a small
+        #: table over many tiny files, and every rewrite pays the
+        #: per-file open cost back (30% of build+query measured at
+        #: sf0.1). Set to None for a summary whose member grain is
+        #: genuinely large.
         self.coalesce_files = coalesce_files
 
     def _shrink(self, df: DataFrame) -> DataFrame:
         return df.coalesce(self.coalesce_files) if self.coalesce_files else df
 
-    # -- paths ------------------------------------------------------------
     @property
-    def additive_path(self) -> str:
-        return os.path.join(self.path, "additive")
+    def table_path(self) -> str:
+        return os.path.join(self.path, "partials")
 
-    @property
-    def members_path(self) -> str:
-        return os.path.join(self.path, "members")
-
-    # -- build ------------------------------------------------------------
-    def _partials(self, fact: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+    def _partials(self, fact: DataFrame) -> DataFrame:
+        """Additive partials of ``fact`` at (day, dims[, member]) grain."""
         s = self.spec
-        day = _day(F.col(s.time_col)).alias("__day")
+        keys = [_day(F.col(s.time_col)).alias("__day"), *s.dims]
+        if s.distinct_col:
+            keys.append(s.distinct_col)
         aggs = [
             _ADDITIVE[a][0](F.col(c)).alias(f"{a.lower()}__{c}") for a, c in s.measures
         ]
-        additive = fact.groupBy(day, *s.dims).agg(*aggs)
-        members = None
-        if s.distinct_col:
-            members = fact.select(
-                _day(F.col(s.time_col)).alias("__day"), *s.dims, s.distinct_col
-            ).distinct()
-        return additive, members
+        return fact.groupBy(*keys).agg(*aggs)
 
-    def build(self, fact: DataFrame) -> None:
-        """Full (re)build of the summary from the fact table.
-
-        ``__day`` is kept as a sorted data column rather than a Hive
+    def _write(self, partials: DataFrame, mode: str) -> None:
+        """``__day`` is kept as a sorted data column rather than a Hive
         partition dir: parquet row-group min/max stats give the same
         range pruning without one-tiny-file-per-day explosion (1000s
-        of days x dims would otherwise dominate scan setup)."""
-        additive, members = self._partials(fact)
-        self._shrink(additive).sortWithinPartitions("__day").write.mode("overwrite").parquet(
-            self.additive_path
+        of days x dims would otherwise dominate scan setup). One table
+        means one write job: a failed task aborts the job, and none of
+        the update's rows are committed."""
+        self._shrink(partials).sortWithinPartitions("__day").write.mode(mode).parquet(
+            self.table_path
         )
-        if members is not None:
-            self._shrink(members).sortWithinPartitions("__day").write.mode("overwrite").parquet(
-                self.members_path
-            )
+
+    def _read(self, spark: SparkSession) -> DataFrame | None:
+        """The summary table, or None before the first write. Callers
+        read it once and derive the day set from the same relation, so
+        each call pays one schema inference."""
+        if not os.path.exists(self.table_path):
+            return None
+        return spark.read.parquet(self.table_path)
+
+    # -- build ------------------------------------------------------------
+    def build(self, fact: DataFrame) -> None:
+        """Full (re)build of the summary from the fact table."""
+        self._write(self._partials(fact), "overwrite")
 
     def append_partials(self, fact: DataFrame) -> None:
-        """Append per-(day, dims) partial summary rows for ``fact``
-        WITHOUT the new-day skip — the micro-batch ingestion path
-        (a batch may carry a fraction of a day; ``rewrite`` merge-
-        aggregates partial rows, so appends are additive). The caller
-        owns exactly-once delivery (streaming checkpoint)."""
-        additive, members = self._partials(fact)
-        self._shrink(additive).sortWithinPartitions("__day").write.mode("append").parquet(
-            self.additive_path
-        )
-        if members is not None:
-            self._shrink(members).sortWithinPartitions("__day").write.mode("append").parquet(
-                self.members_path
-            )
-
-    def _days_df(self, spark: SparkSession) -> DataFrame | None:
-        """Distinct summarized days as a (small) DataFrame — day
-        membership is always handled with joins against this relation,
-        never literal IN-lists (thousands of literals wreck both
-        planning time and codegen; a broadcast join does not)."""
-        if not os.path.exists(self.additive_path):
-            return None
-        return spark.read.parquet(self.additive_path).select("__day").distinct()
+        """Append partial summary rows for ``fact`` WITHOUT the new-day
+        skip — the micro-batch ingestion path (a batch may carry a
+        fraction of a day; ``rewrite`` merge-aggregates partial rows,
+        so appends are additive). The caller owns exactly-once
+        delivery (streaming checkpoint)."""
+        self._write(self._partials(fact), "append")
 
     def summarized_days(self, spark: SparkSession) -> set:
-        days = self._days_df(spark)
-        if days is None:
+        summary = self._read(spark)
+        if summary is None:
             return set()
-        return {r["__day"] for r in days.collect()}
+        return {r["__day"] for r in summary.select("__day").distinct().collect()}
 
     def incremental_update(self, spark: SparkSession, fact: DataFrame) -> int:
         """Append summary rows for fact days not yet summarized
         (SummaryRewriter's only-new-days consumption). Returns the
-        number of new days. Day membership via broadcast anti-join."""
+        number of new days. Day membership via broadcast anti-join —
+        never a literal IN-list of dates (thousands of literals wreck
+        both planning time and codegen; a broadcast join does not)."""
         s = self.spec
-        delta = fact
-        have = self._days_df(spark)
-        if have is not None:
-            delta = fact.join(
-                F.broadcast(have),
+        summary = self._read(spark)
+        if summary is not None:
+            fact = fact.join(
+                F.broadcast(summary.select("__day").distinct()),
                 _day(F.col(s.time_col)) == F.col("__day"),
                 "left_anti",
             )
-        new_days = delta.select(_day(F.col(s.time_col)).alias("__day")).distinct().count()
-        if new_days == 0:
-            return 0
-        additive, members = self._partials(delta)
-        self._shrink(additive).sortWithinPartitions("__day").write.mode("append").parquet(
-            self.additive_path
-        )
-        if members is not None:
-            self._shrink(members).sortWithinPartitions("__day").write.mode("append").parquet(
-                self.members_path
-            )
-        return new_days
+        # the count and the write share one computation of the delta
+        partials = self._partials(fact).persist()
+        try:
+            new_days = partials.select("__day").distinct().count()
+            if new_days:
+                self._write(partials, "append")
+            return new_days
+        finally:
+            partials.unpersist()
 
     # -- rewrite ----------------------------------------------------------
     def rewrite(
@@ -233,64 +221,43 @@ class SummaryStore:
     ) -> DataFrame:
         """Answer GROUP BY ``group_dims`` over fact days in [start, end]
         from the summary, splicing un-summarized days from the fact
-        table. Result is identical to the direct aggregation.
+        table. Result is identical to the direct aggregation (DOUBLE
+        SUMs up to summation order, see the module docstring).
 
         ``group_dims`` must be a subset of the spec dims (the summary
         re-aggregates upward, the Cubert summary-cube property).
         """
         s = self.spec
         group_dims = list(group_dims if group_dims is not None else s.dims)
-        assert set(group_dims) <= set(s.dims), "can only roll up stored dims"
+        unknown = [d for d in group_dims if d not in s.dims]
+        if unknown:
+            raise ValueError(
+                f"group_dims {unknown} are not stored dims {list(s.dims)}; "
+                "the summary can only roll up stored dims"
+            )
         start_d = F.lit(start).cast("date")
         end_d = F.lit(end).cast("date")
 
-        days = self._days_df(spark)
         day = _day(F.col(s.time_col))
         missing_fact = fact.filter(day.between(start_d, end_d))
-        if days is not None:
-            # days NOT in the summary: broadcast anti-join, never an
-            # IN-list of dates (range pruning on the scan still applies)
+        rows = self._read(spark)
+        if rows is not None:
+            rows = rows.filter(F.col("__day").between(start_d, end_d))
+            # days NOT in the summary (range pruning on the scan still
+            # applies to both sides)
             missing_fact = missing_fact.join(
-                F.broadcast(days), day == F.col("__day"), "left_anti"
+                F.broadcast(rows.select("__day").distinct()), day == F.col("__day"), "left_anti"
             )
+            rows = rows.unionByName(self._partials(missing_fact))
+        else:
+            rows = self._partials(missing_fact)
 
-        # additive side: summary partials for covered days + fresh
-        # partials for missing days, merged with the merge fn
-        add_parts = []
-        if days is not None:
-            add_parts.append(
-                spark.read.parquet(self.additive_path).filter(
-                    F.col("__day").between(start_d, end_d)
-                )
-            )
-        miss_additive, miss_members = self._partials(missing_fact)
-        add_parts.append(miss_additive)
-        additive_all = add_parts[0]
-        for p in add_parts[1:]:
-            additive_all = additive_all.unionByName(p)
-        merge_aggs = [
+        aggs = [
             _ADDITIVE[a][1](F.col(f"{a.lower()}__{c}")).alias(f"{a.lower()}__{c}")
             for a, c in s.measures
         ]
-        out = additive_all.groupBy(*group_dims).agg(*merge_aggs)
-
         if s.distinct_col:
-            mem_parts = []
-            if days is not None:
-                mem_parts.append(
-                    spark.read.parquet(self.members_path).filter(
-                        F.col("__day").between(start_d, end_d)
-                    )
-                )
-            mem_parts.append(miss_members)
-            members_all = mem_parts[0]
-            for p in mem_parts[1:]:
-                members_all = members_all.unionByName(p)
-            cd = members_all.groupBy(*group_dims).agg(
+            aggs.append(
                 F.countDistinct(s.distinct_col).alias(f"count_distinct__{s.distinct_col}")
             )
-            if group_dims:
-                out = out.join(cd, group_dims, "full")
-            else:
-                out = out.crossJoin(cd)
-        return out
+        return rows.groupBy(*group_dims).agg(*aggs)

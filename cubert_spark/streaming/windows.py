@@ -168,7 +168,8 @@ def stream_stream_join(
 def maintain_summary(stream_df: DataFrame, store) -> "object":
     """Incrementally maintain a :class:`cubert_spark.plans.summary.
     SummaryStore` from a stream: each micro-batch appends its partial
-    (day, dims) summary rows (the streaming form of Cubert's
+    summary rows at the store's (day, dims[, member]) grain to its one
+    table, in one write (the streaming form of Cubert's
     SummaryRewriter consumption loop — AggregateRewriter.java:54).
     Partials, not whole days: a micro-batch can carry a fraction of a
     day, and ``SummaryStore.rewrite`` merge-aggregates partial rows.

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -29,3 +30,32 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+def _in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.fixture()
+def jobs_in(spark):
+    """``jobs_in(group, fn)`` -> ``fn()`` and the number of Spark jobs
+    it fired. The status tracker is fed asynchronously by the listener
+    bus, in order, so once a later sentinel job is visible every job
+    ``fn`` fired is visible too."""
+
+    def run(group: str, fn):
+        out = _in_group(spark, group, fn)
+        sentinel = f"{group}-sentinel"
+        _in_group(spark, sentinel, lambda: spark.range(1).count())
+        tracker = spark.sparkContext.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run

@@ -11,33 +11,10 @@ import pyarrow.parquet as pq
 from cubert_spark.catalog import load_table
 
 
-def _in_group(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        return fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
-def _jobs_in(spark, group: str, fn):
-    """``fn()`` and the number of Spark jobs it fired. The status tracker
-    is fed asynchronously by the listener bus, in order, so once a later
-    sentinel job is visible every job ``fn`` fired is visible too."""
-    out = _in_group(spark, group, fn)
-    sentinel = f"{group}-sentinel"
-    _in_group(spark, sentinel, lambda: spark.range(1).count())
-    tracker = spark.sparkContext.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    return out, len(tracker.getJobIdsForGroup(group))
-
-
-def test_repeated_load_fires_no_job(spark, tmp_path):
+def test_repeated_load_fires_no_job(spark, jobs_in, tmp_path):
     pq.write_table(pa.table({"k": [1, 2, 3]}), tmp_path / "t.parquet")
-    first, n_first = _jobs_in(spark, "memo-first", lambda: load_table(spark, str(tmp_path), "t"))
-    again, n_again = _jobs_in(spark, "memo-again", lambda: load_table(spark, str(tmp_path), "t"))
+    first, n_first = jobs_in("memo-first", lambda: load_table(spark, str(tmp_path), "t"))
+    again, n_again = jobs_in("memo-again", lambda: load_table(spark, str(tmp_path), "t"))
     assert n_first == 1 and n_again == 0
     assert again.schema == first.schema
     assert sorted(r.k for r in again.collect()) == [1, 2, 3]

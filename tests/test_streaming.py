@@ -150,7 +150,7 @@ def test_maintain_summary_from_stream(spark, events_dir, tmp_path):
     stream = read_parquet_stream(spark, events_dir, batch.schema, max_files_per_trigger=1)
     q = maintain_summary(stream, store)
     q.awaitTermination()
-    summarized = spark.read.parquet(store.additive_path)
+    summarized = spark.read.parquet(store.table_path)
     got = {
         (r["__day"], r["event_type"]): r["count__user_id"]
         for r in summarized.groupBy("__day", "event_type")

@@ -41,15 +41,23 @@ def _direct(fact, start, end, dims):
 
 
 def _as_dict(df, dims):
-    return {
+    rows = df.collect()
+    out = {
         tuple(r[d] for d in dims): (
-            float(r["sum__price_dec"]),
+            r["sum__price_dec"],
             r["count__o_orderkey"],
             r["min__o_totalprice"],
             r["count_distinct__o_custkey"],
         )
-        for r in df.collect()
+        for r in rows
     }
+    assert len(out) == len(rows), "a group came out as more than one row"
+    return out
+
+
+def _assert_rewrite_is_direct(spark, store, fact, start, end, dims):
+    got = _as_dict(store.rewrite(spark, fact, start, end, dims), dims)
+    assert got == _as_dict(_direct(fact, start, end, dims), dims)
 
 
 def test_rewrite_matches_direct_full_coverage(spark, fact, tmp_path):
@@ -106,3 +114,120 @@ def test_metadata_roundtrip(tmp_path):
     store = SummaryStore(str(tmp_path / "s5"), SPEC)
     reopened = SummaryStore(str(tmp_path / "s5"))
     assert reopened.spec == SPEC
+
+
+def _day_before(d):
+    return F.to_date("o_orderdate") < F.lit(d)
+
+
+def _null_every(col, n):
+    """Null ``col`` on every ``n``-th order key."""
+    return lambda f: f.withColumn(
+        col, F.when(F.col("o_orderkey") % n == 0, F.lit(None)).otherwise(F.col(col))
+    )
+
+
+@pytest.mark.parametrize(
+    "prep, summarize, start, end, dims",
+    [
+        # empty fact: the store is built from zero rows
+        (lambda f: f.limit(0), lambda f: f, "1992-01-01", "2001-12-31", ["o_orderpriority"]),
+        # a store never built answers from the fact alone
+        (lambda f: f, None, "1995-01-01", "1997-12-31", ["o_orderpriority"]),
+        # null dims group together, summarized and spliced alike
+        (
+            lambda f: _null_every("o_orderstatus", 5)(_null_every("o_orderpriority", 3)(f)),
+            lambda f: f.filter(_day_before("1996-01-01")),
+            "1994-01-01",
+            "1998-12-31",
+            ["o_orderpriority", "o_orderstatus"],
+        ),
+        # null members count in SUM/COUNT, not in the count-distinct
+        (
+            _null_every("o_custkey", 4),
+            lambda f: f.filter(_day_before("1996-01-01")),
+            "1994-01-01",
+            "1998-12-31",
+            ["o_orderpriority"],
+        ),
+        # range fully summarized: nothing spliced
+        (lambda f: f, lambda f: f, "1994-01-01", "1996-12-31", ["o_orderstatus"]),
+        # range fully missing: everything spliced
+        (
+            lambda f: f,
+            lambda f: f.filter(_day_before("1996-01-01")),
+            "1997-01-01",
+            "1998-12-31",
+            ["o_orderstatus"],
+        ),
+        # grand total over a partly summarized range
+        (lambda f: f, lambda f: f.filter(_day_before("1996-01-01")), "1995-01-01", "1997-12-31", []),
+        # grand total over an empty range: one row of nulls and zeros
+        (lambda f: f, lambda f: f, "2030-01-01", "2030-12-31", []),
+    ],
+    ids=[
+        "empty_fact",
+        "never_built",
+        "null_dims",
+        "null_members",
+        "fully_summarized",
+        "fully_missing",
+        "no_group_dims",
+        "no_group_dims_empty_range",
+    ],
+)
+def test_rewrite_degenerate_inputs(spark, fact, tmp_path, prep, summarize, start, end, dims):
+    fact = prep(fact)
+    store = SummaryStore(str(tmp_path / "sd"), SPEC)
+    if summarize is not None:
+        store.build(summarize(fact))
+    _assert_rewrite_is_direct(spark, store, fact, start, end, dims)
+
+
+def test_failed_update_commits_nothing(spark, fact, tmp_path):
+    """An update that fails part-way must leave the store as it was:
+    a day half-summarized would be skipped by the retry, and the
+    rewrite would then diverge from the direct aggregation."""
+    store = SummaryStore(str(tmp_path / "sf"), SPEC)
+    store.build(fact.filter(_day_before("1996-01-01")))
+    before = store.summarized_days(spark)
+    poisoned = fact.withColumn(
+        "o_custkey",
+        F.when(
+            F.to_date("o_orderdate") >= F.lit("1996-06-01"),
+            F.raise_error(F.lit("injected member failure")),
+        ).otherwise(F.col("o_custkey")),
+    )
+    with pytest.raises(Exception, match="injected member failure"):
+        store.incremental_update(spark, poisoned)
+    assert store.summarized_days(spark) == before
+    added = store.incremental_update(spark, fact)
+    assert added > 0
+    assert len(store.summarized_days(spark)) == len(before) + added
+    _assert_rewrite_is_direct(
+        spark, store, fact, "1995-01-01", "2001-12-31", ["o_orderpriority", "o_orderstatus"]
+    )
+
+
+def test_rewrite_rejects_unstored_dims(spark, fact, tmp_path):
+    store = SummaryStore(str(tmp_path / "sv"), SPEC)
+    with pytest.raises(ValueError, match="o_clerk"):
+        store.rewrite(spark, fact, "1995-01-01", "1995-12-31", ["o_orderstatus", "o_clerk"])
+
+
+def test_job_counts_per_call(spark, jobs_in, fact, tmp_path):
+    """Upper bounds on the Spark jobs each call fires (one table: one
+    schema inference per call, one write per build or update). With
+    separate additive and member tables, build/update/rewrite fired
+    4/14/3."""
+    store = SummaryStore(str(tmp_path / "sj"), SPEC)
+    _, build = jobs_in("summary-build", lambda: store.build(fact.filter(_day_before("1998-01-01"))))
+    added, update = jobs_in(
+        "summary-update", lambda: store.incremental_update(spark, fact.filter(_day_before("1999-01-01")))
+    )
+    _, rewrite = jobs_in(
+        "summary-rewrite",
+        lambda: store.rewrite(spark, fact, "1996-01-01", "2000-12-31", ["o_orderpriority"]),
+    )
+    assert added > 0
+    assert build <= 2 and update <= 9 and rewrite <= 1, (build, update, rewrite)
