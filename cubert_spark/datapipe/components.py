@@ -310,8 +310,8 @@ def bfs_hops(
     localCheckpoint'ed (r16): ``nxt`` feeds both the union and the
     next round's anti-join/frontier, so without the checkpoint the
     round-h plan re-evaluates every earlier round's join 2^(h-depth)
-    times (plan audit: 21 scans for a 3-hop walk,
-    `plans/r16/bfs_hops_before.txt`). With it, each round's join runs
+    times (r16 plan audit: 21 scans for a 3-hop walk; regenerate the
+    explain dump with `tools/dump_plans.py`). With it, each round's join runs
     exactly once and later rounds read the layer's blocks — linear in
     max_hops, still zero driver-side data."""
     sym = (

@@ -355,7 +355,8 @@ def minhash_lsh_pairs(
     # id_b union AND the final verify join — without it the whole
     # signature pipeline (shingle explode -> md5 lanes -> band
     # self-join -> distinct) is re-evaluated once per consumer, 3x
-    # (plan audit: `plans/r16/minhash_lsh_before.txt`, 11 Generates).
+    # (r16 plan audit: 11 Generates; `tools/dump_plans.py` regenerates
+    # the explain dump).
     # This is NOT the rejected sh-persist of the A/B note above: the
     # materialized relation is the candidate PAIR LIST (near-dup
     # population sized, tiny at any scale), not the 10x-corpus

@@ -1236,7 +1236,7 @@ def semantic_dedup(
     # self-join AND the final anti-join — without it the centroid
     # argmax (the a*N*k DECIMAL term that dominates the r13 cost
     # model) is evaluated once per consumer, 3x total (plan audit:
-    # 3 corpus scans, `plans/r16/semantic_dedup_before.txt`).
+    # 3 corpus scans at r16; `tools/dump_plans.py` regenerates it).
     # Materializing N*(id, vec, norm, list_id) rows once is the same
     # trade gopher_repetition's base checkpoint makes; at 100 TB it
     # is disk-backed block storage, linear in the corpus, and
@@ -1721,8 +1721,8 @@ def margin_align(
     :func:`margin_from_candidates` (bit-identical fold — see its
     docstring), so the |X| x |Y| DECIMAL pair matrix is evaluated ONCE;
     the old spelling's groupBy-avg_k + broadcast-join-back recomputed
-    the cross-join lineage three times (plan audit: 3 scans of each
-    side, `plans/r16/margin_align_before.txt`).
+    the cross-join lineage three times (r16 plan audit: 3 scans of
+    each side; regenerate with `tools/dump_plans.py`).
     """
     from cubert_spark.datapipe.dedup import _spread
 

@@ -2306,8 +2306,8 @@ def q_semantic_dedup_prod(spark: SparkSession, sf: str) -> DataFrame:
     # agreement intersection and its own count aggregate — without it
     # the whole tier (centroid assignment + cluster-bounded pair
     # stage) runs once per consumer (guide §2.4 diamond-lineage rule;
-    # plan audit: `plans/r16/semantic_dedup_prod_before.txt` shows 13
-    # embedding scans). Kept sets are id-sized; recomputed per
+    # the r16 plan audit showed 13 embedding scans; `tools/dump_plans.py`
+    # regenerates it). Kept sets are id-sized; recomputed per
     # invocation.
     exact = similarity.semantic_dedup(
         e, _SEMDEDUP_CENTROIDS, threshold=0.3
@@ -3615,9 +3615,8 @@ def q_margin_align_prod(spark: SparkSession, sf: str) -> DataFrame:
     # localCheckpoint (lazy, r16): each tier's kept pairs feed BOTH the
     # agreement intersection and its own count aggregate — without it
     # the whole tier (the DECIMAL pair matrix / the IVF probe chain)
-    # runs once per consumer (guide §2.4; plan audit:
-    # `plans/r16/margin_align_prod_before.txt` shows 24 embedding
-    # scans). Kept sets are pair-id-sized; recomputed per invocation.
+    # runs once per consumer (guide §2.4; the r16 plan audit showed 24
+    # embedding scans, `tools/dump_plans.py` regenerates it). Kept sets are pair-id-sized; recomputed per invocation.
     exact = similarity.margin_align(
         x, y, k=4, margin_threshold=1.0, max_x=None
     ).select("x_id", "y_id").transform(lazy_checkpoint)

@@ -19,8 +19,7 @@ import sys
 
 def plan_stats(plan_text: str) -> dict:
     """Count physical operators from an explain('formatted') header
-    tree — same convention as plans/r16/_stats_*.json (node name with
-    join type/build side, no ids)."""
+    tree (node name with join type/build side, no ids)."""
     counts: dict[str, int] = {}
     for line in plan_text.splitlines():
         if line.startswith("== "):
