@@ -4,6 +4,13 @@
 
 Prints ONE JSON line:
 {"metric": "...", "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+and writes the full per-row record to BENCH_DETAIL.json (or
+BENCH_DETAIL_sf<sf>.json off sf0.1).
+
+``python bench.py QUERY [QUERY ...]`` times only the named rows under
+the same warmup and timed runs, prints ``{name: {"min", "runs"}}`` and
+writes no record file. That is one side of the paired A/B against the
+parent commit, the rule for judging a regression (README.md).
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver collect). The set started as BASELINE.md §2's protocol
@@ -20,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -347,9 +355,7 @@ def _stdout_payload(
     total: float,
     sf,
     rot: int | None = None,
-    quiet: bool | None = None,
     pyloop_ds: int | None = None,
-    anchor_rebase: bool = False,
 ) -> str:
     """The ONE compact stdout line. The driver's capture keeps the
     last ~2 KB of output (the full medians+runs payload truncated the
@@ -375,11 +381,13 @@ def _stdout_payload(
     so the external record is self-describing — every declared row
     reaches some BENCH_r*.json within k=ceil(pool/width) rounds
     instead of the r14 freeze-out. 8 = + host attribution (r16):
-    "quiet" (the quietness-gate verdict: true/false, null = gate
-    never ran) and "pyloop_ds" (single-thread fingerprint in
-    DECIseconds) ride the external line, so a degraded-host capture
-    like BENCH_r15 (evening box, 0.52 s pyloop vs the 0.38 s anchor
-    window) is self-attributing without opening SCALE.md."""
+    "quiet" (the quietness-gate verdict, null = gate never ran) and
+    "pyloop_ds" (single-thread fingerprint in DECIseconds) ride the
+    external line, so a degraded-host capture like BENCH_r15 (evening
+    box, 0.52 s pyloop vs 0.38 s) is self-attributing without opening
+    SCALE.md. There is no gate any more (regressions are judged by
+    the paired A/B, README.md), so "quiet" is always null and a v8
+    parser reads the line unchanged."""
     import json
 
     def render(decimals: int, rows: dict, dropped: int = 0) -> str:
@@ -399,13 +407,8 @@ def _stdout_payload(
             d["rot"] = rot
         # always emitted (null quiet = gate never ran): a missing key
         # would be indistinguishable from a pre-v8 line
-        d["quiet"] = quiet
+        d["quiet"] = None
         d["pyloop_ds"] = pyloop_ds
-        # r17 (ADVICE): a rebase-assisted quiet pass self-describes —
-        # emitted only when the flag fired, so an ordinary line's
-        # byte budget is unchanged and pre-r17 lines parse identically
-        if anchor_rebase:
-            d["anchor_rebase"] = True
         if dropped:
             d["dropped"] = dropped
         return json.dumps(d, separators=(",", ":"))
@@ -471,10 +474,7 @@ def host_fingerprint() -> dict:
 
 
 def warmup(spark, sf_dir: str) -> None:
-    """The protocol's uncounted warmups, shared with
-    tools/triage_bench.py so triage numbers are measured under the
-    SAME protocol as the official record (a drifted copy-paste would
-    invalidate regression attributions): JVM/codegen/parquet-reader
+    """The protocol's uncounted warmups: JVM/codegen/parquet-reader
     warmup on a trivial action, then a Python-worker + Arrow batch."""
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
@@ -487,11 +487,10 @@ def warmup(spark, sf_dir: str) -> None:
 
 def timed_run(spark, fn, sf_dir: str) -> float:
     """One timed end-to-end execution under the protocol (noop sink =
-    full computation, no driver collect). Shared with triage_bench.
-    Roundtrip queries memoize their STORE step per session
-    (_materialize_once); reset so EVERY timed run pays the full
-    store->load path — otherwise runs 2..n time only the read side
-    and the min stops measuring the writer."""
+    full computation, no driver collect). Roundtrip queries memoize
+    their STORE step per session (_materialize_once); reset so EVERY
+    timed run pays the full store->load path — otherwise runs 2..n
+    time only the read side and the min stops measuring the writer."""
     from cubert_spark.queries.extensions import reset_materialized
 
     reset_materialized()
@@ -500,66 +499,8 @@ def timed_run(spark, fn, sf_dir: str) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def _regressed_rows(
-    timings: dict, prev_queries: dict, prev_runs: dict, names: list
-) -> list:
-    """Rows whose fresh min exceeds the previous committed min by more
-    than that row's previously observed spread — the same rule
-    SCALE.md's round-over-round triage uses. Tolerance floors: 15% of
-    the old min (whole-suite cross-round variance is real even on a
-    clean machine — r10 saw a diffuse +6% on untouched code) and an
-    absolute 50 ms so sub-0.3s rows don't flap on timer noise."""
-    out = []
-    for n in names:
-        old = prev_queries[n]
-        spread = (max(prev_runs[n]) - old) if n in prev_runs else 0.0
-        if timings[n] > old + max(spread, 0.15 * old, 0.05):
-            out.append(n)
-    return out
-
-
-#: r15 (VERDICT r14 task 2): the prev-pass-only gate RATCHETS — r14's
-#: minhash_lsh committed medians walked 3.8 -> 5.6 -> 9.1 s with
-#: quiet_pass=true at every step because each pass compared only to
-#: the one before it. The anchor gate pins each row to its BEST-EVER
-#: quiet median (BENCH_ANCHORS.json, monotone-decreasing, updated
-#: only by quiet passes) and fails quiet_pass when any row's fresh
-#: median exceeds ANCHOR_FACTOR x its anchor — no number of
-#: intermediate quiet passes can launder a slow drift past it. The
-#: 0.15 s absolute floor keeps sub-0.3 s rows from flapping on timer
-#: noise (1.5 x 0.2 s = 0.3 s is within box weather).
-ANCHOR_FACTOR = 1.5
-ANCHOR_ABS_FLOOR = 0.15
-
-
-def _anchor_regressed(medians: dict, anchors: dict, names: list) -> list:
-    """Rows whose fresh median exceeds ANCHOR_FACTOR x the pinned
-    best-ever quiet median (and the absolute floor). Pure so tests
-    can replay committed-median sequences against it."""
-    out = []
-    for n in names:
-        a = anchors.get(n)
-        if a is None or n not in medians:
-            continue
-        m = medians[n]
-        if m > ANCHOR_FACTOR * a and m > a + ANCHOR_ABS_FLOOR:
-            out.append(n)
-    return out
-
-
-def _updated_anchors(medians: dict, anchors: dict, names: list) -> dict:
-    """Fold a QUIET pass into the anchor file: existing anchors only
-    move DOWN (best-ever), new rows seed at their first quiet median.
-    Replaying r14's 3.8 -> 5.6 -> 9.1 sequence through this keeps the
-    anchor at 3.8, so the 9.1 pass fails the gate (the test pins it)."""
-    out = dict(anchors)
-    for n in names:
-        if n in medians:
-            out[n] = min(out.get(n, medians[n]), medians[n])
-    return out
-
-
 def main() -> None:
+    names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     # keep the CAPTURED STRING too: the official-protocol check below
@@ -584,8 +525,12 @@ def main() -> None:
     # bench-only rows (no possible oracle) come from the ONE shared
     # registry; folded contract-twins (driver inventory consolidation,
     # r7) stay benched — perf coverage is independent of rotation
+    queries = all_queries()
     _extra = extra_bench_queries()
     _extra.update(folded_queries())
+    unknown = [n for n in names if n not in queries and n not in _extra]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
 
     # Console progress bars are stderr \r-frame floods — at ~70
     # queries x 3 runs they overflowed the driver's capture budget in
@@ -595,141 +540,40 @@ def main() -> None:
     spark = get_session(
         "cubert-bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    queries = all_queries()
     warmup(spark, sf_dir)
 
     # n>=2 timed repeats per query; report the per-query MIN (the
     # reproducible capability of the code on this box) and keep the
-    # raw runs + median so round-over-round deltas can be judged
-    # against the observed spread instead of single-shot weather.
-    # No module-global caches exist any more (the r04 shingle cache
-    # was removed after A/B showed recompute beats it), so runs are
-    # order-independent by construction.
+    # raw runs + median so an A/B can be judged against the observed
+    # spread instead of single-shot weather. No module-global caches
+    # exist any more (the r04 shingle cache was removed after A/B
+    # showed recompute beats it), so runs are order-independent by
+    # construction.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    timings: dict[str, float] = {}
-    medians: dict[str, float] = {}
     raw_runs: dict[str, list[float]] = {}
-
-    def _timed_run(fn) -> float:
-        return timed_run(spark, fn, sf_dir)
-
-    def _set_row(name: str, runs: list[float]) -> None:
-        raw_runs[name] = runs
-        timings[name] = min(runs)
-        srt = sorted(runs)
-        mid = len(srt) // 2
-        medians[name] = round(
-            srt[mid] if len(srt) % 2 else (srt[mid - 1] + srt[mid]) / 2, 3
-        )
-
-    for name in BENCH_QUERIES:
+    for name in names or BENCH_QUERIES:
         fn = queries.get(name) or _extra[name]
-        _set_row(name, [_timed_run(fn) for _ in range(n_runs)])
+        raw_runs[name] = [timed_run(spark, fn, sf_dir) for _ in range(n_runs)]
         print(
-            f"# {name}: min={timings[name]:.3f}s runs={raw_runs[name]}",
+            f"# {name}: min={min(raw_runs[name]):.3f}s runs={raw_runs[name]}",
             file=sys.stderr,
         )
 
-    # --- quietness gate (r11 VERDICT task 3) -------------------------
-    # The r11 official medians were committed from a loaded pass
-    # (every heavy row's run[0] was the max) and poisoned the next
-    # round's regression baseline. run[0]-high alone is NOT a load
-    # signal — per-query codegen warmup makes run[0] the max on ~90%
-    # of rows in every committed round — so the gate compares each
-    # row's fresh min against the PREVIOUS committed min + spread and
-    # re-measures the regressed rows at the END of the suite (warmest
-    # JVM, transient load most likely passed). Rows still regressed
-    # after the requeue are recorded; a pass with more than
-    # max(4, 15% of shared rows) of them is stamped quiet_pass=false
-    # so nobody treats its medians as the official baseline.
-    requeued: list[str] = []
-    still_regressed: list[str] = []
-    anchor_violations: list[str] = []
-    # None = the gate never ran (off-SF run, or no readable committed
-    # baseline) — recording true there would make an UNVERIFIED pass
-    # indistinguishable from a gate-verified quiet one
-    quiet_pass: bool | None = None
-    _rebase = os.environ.get("SPARK_GRAFT_REBASE_ANCHORS") == "1"
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    anchors_path = os.path.join(repo_dir, "BENCH_ANCHORS.json")
-    anchors: dict = {}
-    if sf_str == "0.1" and os.path.exists(anchors_path):
-        try:
-            with open(anchors_path) as f:
-                anchors = json.load(f).get("anchors", {})
-        except (OSError, ValueError) as e:
-            print(
-                f"WARNING: {anchors_path} unreadable ({e}); anchor "
-                "gate disabled for this run",
-                file=sys.stderr,
-            )
-    prev_path = os.path.join(os.path.dirname(__file__), "BENCH_DETAIL.json")
-    prev = None
-    if sf_str == "0.1" and os.path.exists(prev_path):
-        try:
-            with open(prev_path) as f:
-                prev = json.load(f)
-        except (OSError, ValueError) as e:
-            # a corrupt baseline silently disables the quietness gate
-            # (quiet_pass stays None) — make that visible in the log
-            print(
-                f"WARNING: committed baseline {prev_path} exists but "
-                f"could not be read ({e}); quietness gate DISABLED "
-                "for this run",
-                file=sys.stderr,
-            )
-            prev = None
-    if prev and isinstance(prev.get("queries"), dict):
-        pq, pr = prev["queries"], prev.get("runs", {})
-        shared = [n for n in BENCH_QUERIES if n in pq]
-        requeued = sorted(
-            set(_regressed_rows(timings, pq, pr, shared))
-            | set(_anchor_regressed(medians, anchors, BENCH_QUERIES)),
-            key=BENCH_QUERIES.index,
+    if names:
+        # named rows are one side of an A/B pair (README.md), not a
+        # record: full-precision runs on stdout, no detail file
+        print(
+            json.dumps({n: {"min": min(r), "runs": r} for n, r in raw_runs.items()}),
+            flush=True,
         )
-        for name in requeued:
-            fn = queries.get(name) or _extra[name]
-            extra_runs = [_timed_run(fn) for _ in range(2)]
-            _set_row(name, raw_runs[name] + extra_runs)
-            print(
-                f"# requeue {name}: min={timings[name]:.3f}s "
-                f"extra_runs={extra_runs}",
-                file=sys.stderr,
-            )
-        still_regressed = _regressed_rows(
-            timings, pq, pr, [n for n in requeued if n in pq]
-        )
-        anchor_violations = _anchor_regressed(medians, anchors, requeued)
-        # r16: under SPARK_GRAFT_REBASE_ANCHORS=1 the anchor clause is
-        # excluded from the quiet verdict — the flag's whole purpose is
-        # a NAMED environment change (recorded in SCALE.md) that makes
-        # the pinned anchors inapplicable, and before this fix the
-        # violations they produced gated the very rebase meant to
-        # replace them (unreachable escape hatch). The prev-spread
-        # clause still applies, so a genuinely loaded pass cannot
-        # launder itself via the flag.
-        quiet_pass = len(still_regressed) <= max(
-            4, round(0.15 * len(shared))
-        ) and (_rebase or not anchor_violations)
-        if not quiet_pass:
-            print(
-                f"# LOADED PASS: {len(still_regressed)}/{len(shared)} rows "
-                f"regressed beyond prior spread after requeue "
-                f"({still_regressed}); anchor violations (median > "
-                f"{ANCHOR_FACTOR}x best-ever quiet median): "
-                f"{anchor_violations} — do NOT commit this "
-                "BENCH_DETAIL.json as the official medians; re-run on "
-                "a quiet machine (or, for a named environment change "
-                "recorded in SCALE.md, re-pin anchors with "
-                "SPARK_GRAFT_REBASE_ANCHORS=1).",
-                file=sys.stderr,
-            )
+        spark.stop()
+        return
 
+    timings = {n: min(r) for n, r in raw_runs.items()}
+    medians = {n: round(statistics.median(r), 3) for n, r in raw_runs.items()}
     total = round(sum(timings.values()), 3)
-    # Per-query relative spread (max-min)/min from the raw runs: the
-    # round-over-round regression rule (SCALE.md) flags a query only
-    # when the new min exceeds the old min + its observed spread, so
-    # single-shot box weather doesn't read as a code regression.
+    # Per-query relative spread (max-min)/min from the raw runs, so a
+    # delta can be read against the row's own run-to-run noise.
     spreads = {
         n: round((max(r) - min(r)) / min(r), 3) if min(r) > 0 else 0.0
         for n, r in raw_runs.items()
@@ -744,6 +588,7 @@ def main() -> None:
     # whose time still counts in "value") buys the 1-decimal rung
     # back with ~400 bytes of margin. Everything else goes to
     # BENCH_DETAIL.json next to this script (committed per-round).
+    repo_dir = os.path.dirname(os.path.abspath(__file__))
     rot = _rotation_index(repo_dir)
     declared_order = [n for n in BENCH_QUERIES if n in queries]
     stdout_rows = _rotate_stdout_rows(
@@ -757,9 +602,7 @@ def main() -> None:
         total,
         sf,
         rot=rot,
-        quiet=quiet_pass,
         pyloop_ds=int(round(host["pyloop10m_sec"] * 10)),
-        anchor_rebase=_rebase,
     )
     detail = {
         "metric": "bench_total_wall_sec",
@@ -770,67 +613,19 @@ def main() -> None:
         "runs": raw_runs,
         "spreads": spreads,
         "n_runs_per_query": n_runs,
-        "requeued": requeued,
-        "still_regressed": still_regressed,
-        "anchor_violations": anchor_violations,
-        "quiet_pass": quiet_pass,
-        "anchor_rebase": _rebase,
         "stdout_rotation": rot,
         "host": host,
         "bench_schema_version": 8,
         "sf": sf,
     }
-    # Anchor maintenance: ONLY a gate-verified quiet official pass may
-    # touch BENCH_ANCHORS.json, and existing anchors only move DOWN
-    # (best-ever quiet median). SPARK_GRAFT_REBASE_ANCHORS=1 re-pins
-    # every anchor to THIS pass's medians — for a named environment
-    # change recorded in SCALE.md (e.g. the r14->r15 host-placement
-    # slowdown), never for routine runs.
-    if sf_str == "0.1" and quiet_pass:
-        if _rebase:
-            new_anchors = {n: medians[n] for n in BENCH_QUERIES if n in medians}
-            print(
-                "# ANCHOR REBASE: re-pinned all anchors to this pass "
-                "(record the named cause in SCALE.md)",
-                file=sys.stderr,
-            )
-        else:
-            new_anchors = _updated_anchors(medians, anchors, BENCH_QUERIES)
-        try:
-            with open(anchors_path, "w") as f:
-                json.dump(
-                    {
-                        "note": "best-ever QUIET official medians per row; "
-                        "written only by gate-verified quiet sf0.1 passes; "
-                        "existing entries only decrease (see bench.py "
-                        "_updated_anchors / ANCHOR_FACTOR)",
-                        "anchors": new_anchors,
-                    },
-                    f,
-                    indent=1,
-                    sort_keys=True,
-                )
-                f.write("\n")
-        except OSError as e:
-            print(f"# BENCH_ANCHORS.json write failed: {e}", file=sys.stderr)
-    # Only the recorded sf0.1 protocol — AND only a pass the quietness
-    # gate did not stamp loaded — overwrites the committed
+    # Only the recorded sf0.1 protocol overwrites the committed
     # BENCH_DETAIL.json: a quick smoke at another SF used to clobber
-    # the round's official medians/spreads (bit us in r11), and a
-    # loaded pass overwriting the baseline would poison the very
-    # record the gate compares against (then a follow-up re-run would
-    # trivially pass against the inflated mins). Off-SF runs land in a
-    # suffixed file; loaded passes in BENCH_DETAIL_LOADED.json. String
-    # compare (not the parsed float) so regex drift can't misroute
-    # the official run.
-    if sf_str != "0.1":
-        detail_name = f"BENCH_DETAIL_sf{sf}.json"
-    elif quiet_pass is False:
-        detail_name = "BENCH_DETAIL_LOADED.json"
-    else:
-        detail_name = "BENCH_DETAIL.json"
+    # the round's official medians/spreads (bit us in r11), so off-SF
+    # runs land in a suffixed file. String compare (not the parsed
+    # float) so regex drift can't misroute the official run.
+    detail_name = "BENCH_DETAIL.json" if sf_str == "0.1" else f"BENCH_DETAIL_sf{sf}.json"
     try:
-        with open(os.path.join(os.path.dirname(__file__), detail_name), "w") as f:
+        with open(os.path.join(repo_dir, detail_name), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
             f.write("\n")
     except OSError as e:

@@ -172,6 +172,26 @@ def resolve_latest(path: str) -> str:
     return matches[-1]
 
 
+def _resolve_format(spark: SparkSession, fmt: str, options: dict) -> str:
+    """Map a Cubert storage name to the Spark data source every LOAD and
+    STORE uses (SURVEY.md §1.4): TEXT -> tab-separated csv (``sep``
+    defaults to a tab), RUBIX -> parquet (block-aligned binary store
+    replaced by parquet + optional bucketing, see operators.blockgen),
+    AVRO -> the pure-Python object-container-file source
+    (sources.AvroDataSource; there is no spark-avro jar here). Any
+    other name passes through lower-cased. ``options`` is updated in
+    place."""
+    fmt = {"text": "csv", "rubix": "parquet"}.get(fmt.lower(), fmt.lower())
+    if fmt == "avro":
+        from cubert_spark.sources import register_sources
+
+        register_sources(spark)
+        fmt = "cubert_avro"
+    if fmt == "csv":
+        options.setdefault("sep", "\t")
+    return fmt
+
+
 def load(
     spark: SparkSession,
     path: str | list[str],
@@ -181,19 +201,11 @@ def load(
 ) -> DataFrame:
     """Cubert ``LOAD "path" USING fmt(params)``.
 
-    Formats (SURVEY.md §1.4): TEXT -> csv, AVRO -> avro, RUBIX ->
-    parquet (block-aligned binary store replaced by parquet + optional
-    bucketing, see operators.blockgen). ``schema`` accepts the Cubert
-    schema string grammar, e.g. ``"STRING word, INT count"``.
+    ``fmt`` follows :func:`_resolve_format` (TEXT, AVRO, RUBIX).
+    ``schema`` accepts the Cubert schema string grammar, e.g.
+    ``"STRING word, INT count"``.
     """
-    fmt = {"text": "csv", "rubix": "parquet"}.get(fmt.lower(), fmt.lower())
-    if fmt == "avro":
-        # no spark-avro jar in this environment: route to the pure-
-        # Python object-container-file source (sources.AvroDataSource)
-        from cubert_spark.sources import register_sources
-
-        register_sources(spark)
-        fmt = "cubert_avro"
+    fmt = _resolve_format(spark, fmt, options)
     if isinstance(path, str):
         path = resolve_latest(path)
     reader = spark.read
@@ -201,8 +213,6 @@ def load(
         from cubert_spark.schema import parse_schema
 
         reader = reader.schema(parse_schema(schema))
-    if fmt == "csv":
-        options.setdefault("sep", "\t")
     return reader.format(fmt).options(**options).load(path)
 
 
@@ -246,16 +256,8 @@ def load_date_range(
 
 def store(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite", **options: str) -> None:
     """Cubert ``STORE x INTO "path" USING fmt()`` (overwrite analyzer ->
-    mode). RUBIX storage maps to parquet; AVRO to the pure-Python
-    object-container-file sink."""
-    fmt = {"text": "csv", "rubix": "parquet"}.get(fmt.lower(), fmt.lower())
-    if fmt == "avro":
-        from cubert_spark.sources import register_sources
-
-        register_sources(df.sparkSession)
-        fmt = "cubert_avro"
-    if fmt == "csv":
-        options.setdefault("sep", "\t")
+    mode). ``fmt`` follows :func:`_resolve_format`, as for LOAD."""
+    fmt = _resolve_format(df.sparkSession, fmt, options)
     df.write.format(fmt).mode(mode).options(**options).save(path)
 
 
@@ -286,9 +288,9 @@ def store_clustered(
     (blockgen.py covers the bucketed-join use; this covers the
     scan-pruning use).
     """
-    fmt = {"text": "csv", "rubix": "parquet"}.get(fmt.lower(), fmt.lower())
     from pyspark.sql import functions as F
 
+    fmt = _resolve_format(df.sparkSession, fmt, options)
     out = df
     if cluster_by:
         cols = [F.col(c) for c in cluster_by]
@@ -348,7 +350,7 @@ def store_zorder(
     """
     from pyspark.sql import functions as F
 
-    fmt = {"text": "csv", "rubix": "parquet"}.get(fmt.lower(), fmt.lower())
+    fmt = _resolve_format(df.sparkSession, fmt, options)
     nb = 1 << bits
     stats = df.agg(
         *[

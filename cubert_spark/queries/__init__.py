@@ -248,9 +248,8 @@ def all_oracles():
 def extra_bench_queries():
     """Bench-only rows: implemented + pytest-pinned operators with no
     possible oracle (JVM-hash positions, float sums), so they live
-    outside queries()/FOLDED entirely. ONE registry shared by
-    bench.py and tools/triage_bench.py — the two maps used to be
-    maintained by hand in both files and drifted on every addition."""
+    outside queries()/FOLDED entirely. bench.py reads them from here,
+    for the full pass and for named rows alike."""
     from cubert_spark.queries import datapipe as _dp
     from cubert_spark.queries import extensions as _ext
 

@@ -7,13 +7,18 @@ adding benched queries can never silently re-break it."""
 from __future__ import annotations
 
 import json
+import os
+import shutil
+import subprocess
+import sys
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _bench():
     import importlib
-    import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _REPO)
     return importlib.import_module("bench")
 
 
@@ -23,16 +28,12 @@ def test_payload_fits_capture_window_at_worst_case_widths():
     several more rows."""
     bench = _bench()
     worst = {n: 99.9 for n in bench.BENCH_QUERIES}
-    p = bench._stdout_payload(
-        worst, 9999.999, 0.1, rot=12, quiet=False, pyloop_ds=999
-    )
+    p = bench._stdout_payload(worst, 9999.999, 0.1, rot=12, pyloop_ds=999)
     assert len(p) <= bench._STDOUT_BUDGET
     # headroom probe: +5 future queries still fit (possibly via the
     # integer-degrade rung, which is exactly what it exists for)
     bigger = dict(worst, **{f"future_query_{i}": 99.9 for i in range(5)})
-    p2 = bench._stdout_payload(
-        bigger, 9999.999, 0.1, quiet=False, pyloop_ds=999
-    )
+    p2 = bench._stdout_payload(bigger, 9999.999, 0.1, pyloop_ds=999)
     assert len(p2) <= bench._STDOUT_BUDGET
 
 
@@ -63,9 +64,7 @@ def test_rotation_covers_every_declared_row_within_k_rounds():
         rows = bench._rotate_stdout_rows(timings, declared_order, rot)
         assert set(bench.BASELINE_PINNED) <= set(rows)
         assert len(rows) <= bench.MAX_STDOUT_ROWS
-        p = bench._stdout_payload(
-            rows, 9999.999, 0.1, rot=rot, quiet=False, pyloop_ds=999
-        )
+        p = bench._stdout_payload(rows, 9999.999, 0.1, rot=rot, pyloop_ds=999)
         assert len(p) <= bench._STDOUT_BUDGET
         d = json.loads(p)
         assert d["rot"] == rot
@@ -82,63 +81,6 @@ def test_rotation_covers_every_declared_row_within_k_rounds():
         r0 = bench._rotate_stdout_rows(timings, declared_order, 0)
         r1 = bench._rotate_stdout_rows(timings, declared_order, 1)
         assert set(r0) != set(r1)
-
-
-def test_anchor_gate_rejects_the_r14_ratchet_sequence():
-    """r14 VERDICT task 2: the prev-pass-only gate admitted
-    minhash_lsh's committed-median walk 3.8 -> 5.6 -> 9.1 s
-    (quiet_pass=true at every step — each pass compared only to the
-    one before). Replaying that sequence against the pinned anchor:
-    the anchor NEVER moves up, so the 9.1 pass violates 1.5x the 3.8
-    anchor and the gate stamps it loaded."""
-    bench = _bench()
-    anchors = {"minhash_lsh": 3.8}
-    # step 1: 5.6 s median — under 1.5 x 3.8 = 5.7, passes (the gate
-    # is an anchor, not a prev-pass ratchet; a one-step +47% is box
-    # weather the requeue already handles)
-    assert bench._anchor_regressed({"minhash_lsh": 5.6}, anchors,
-                                   ["minhash_lsh"]) == []
-    # a quiet pass at 5.6 must NOT raise the anchor
-    anchors = bench._updated_anchors({"minhash_lsh": 5.6}, anchors,
-                                     ["minhash_lsh"])
-    assert anchors == {"minhash_lsh": 3.8}
-    # step 2: 9.1 s — rejected against the still-pinned 3.8 anchor,
-    # which the old prev-pass rule (vs 5.6) would have admitted
-    assert bench._anchor_regressed({"minhash_lsh": 9.1}, anchors,
-                                   ["minhash_lsh"]) == ["minhash_lsh"]
-    # anchors only move DOWN, and new rows seed at first quiet median
-    anchors = bench._updated_anchors(
-        {"minhash_lsh": 3.1, "new_row": 2.0}, anchors,
-        ["minhash_lsh", "new_row"])
-    assert anchors == {"minhash_lsh": 3.1, "new_row": 2.0}
-
-
-def test_anchor_gate_absolute_floor_protects_subsecond_rows():
-    """1.5x alone would flag a 0.2 s row at 0.31 s — timer noise. The
-    0.15 s absolute floor keeps sub-0.3 s rows from flapping."""
-    bench = _bench()
-    anchors = {"tiny": 0.2, "mid": 1.0}
-    assert bench._anchor_regressed({"tiny": 0.34}, anchors, ["tiny"]) == []
-    assert bench._anchor_regressed({"tiny": 0.36}, anchors, ["tiny"]) == ["tiny"]
-    assert bench._anchor_regressed({"mid": 1.45}, anchors, ["mid"]) == []
-    assert bench._anchor_regressed({"mid": 1.55}, anchors, ["mid"]) == ["mid"]
-    # rows without an anchor (first round on the board) never flag
-    assert bench._anchor_regressed({"fresh": 99.0}, anchors, ["fresh"]) == []
-
-
-def test_regression_rule_uses_prior_spread_with_floors():
-    """_regressed_rows implements SCALE.md's triage rule: flag only a
-    min beyond old_min + max(old_spread, 15% rel, 50 ms abs)."""
-    bench = _bench()
-    prev_q = {"a": 2.0, "b": 2.0, "c": 0.1, "d": 1.0}
-    prev_r = {"a": [2.0, 3.0], "b": [2.0, 2.05], "c": [0.1, 0.11]}
-    now = {
-        "a": 4.9,  # beyond 2.0 + spread 1.0 -> flagged
-        "b": 2.25,  # spread 0.05 < 15% floor 0.3; 2.25 < 2.3 -> ok
-        "c": 0.14,  # within the 50 ms absolute floor -> ok
-        "d": 1.10,  # no runs recorded; within 15% floor -> ok
-    }
-    assert bench._regressed_rows(now, prev_q, prev_r, list(now)) == ["a"]
 
 
 def test_payload_is_parseable_json_with_contract_keys():
@@ -159,21 +101,18 @@ def test_payload_is_parseable_json_with_contract_keys():
     assert len(d["queries"]) + d.get("dropped", 0) == len(bench.BENCH_QUERIES)
     assert all(isinstance(v, (int, float)) for v in d["queries"].values())
     # v8 host-attribution keys (r15 VERDICT task 7): always present —
-    # null quiet means the gate never ran, distinct from a quiet pass
+    # null quiet means the gate never ran, and no gate runs any more
     assert d["v"] == 8
     assert "quiet" in d and d["quiet"] is None
     assert "pyloop_ds" in d
-    p8 = bench._stdout_payload(t, 1.0, 0.1, quiet=True, pyloop_ds=4)
-    d8 = json.loads(p8)
-    assert d8["quiet"] is True and d8["pyloop_ds"] == 4
-    # r17 (ADVICE): a rebase-assisted pass is self-describing on the
-    # external line; ordinary lines omit the key (byte budget + pre-
-    # r17 parse compatibility)
-    assert "anchor_rebase" not in d8
-    p9 = bench._stdout_payload(
-        t, 1.0, 0.1, quiet=True, pyloop_ds=4, anchor_rebase=True
+    d8 = json.loads(
+        bench._stdout_payload({"q1_groupby_agg": 1.2}, 1.2, 0.1, rot=3, pyloop_ds=4)
     )
-    assert json.loads(p9)["anchor_rebase"] is True
+    assert d8["quiet"] is None and d8["pyloop_ds"] == 4
+    assert set(d8) == {
+        "metric", "value", "unit", "queries", "v", "sf", "rot", "quiet",
+        "pyloop_ds",
+    }
 
 
 def test_degrade_rung_kicks_in_rather_than_overflow():
@@ -187,3 +126,33 @@ def test_degrade_rung_kicks_in_rather_than_overflow():
     assert len(p) <= bench._STDOUT_BUDGET
     d = json.loads(p)
     assert d["queries"]["query_name_00"] == 123  # integer rung used
+
+
+def test_named_rows_mode_times_only_those_rows(tmp_path, sf_dir):
+    """``bench.py Q ...`` is one side of the A/B pair: one JSON object
+    on stdout holding only the named rows, and no record file. Run in a
+    subprocess because ``main`` stops its session; the script runs from
+    a copy so a stray BENCH_DETAIL*.json would land in ``tmp_path``."""
+    shutil.copy(os.path.join(_REPO, "bench.py"), tmp_path)
+    env = dict(
+        os.environ,
+        PYTHONPATH=_REPO,
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_BENCH_RUNS="1",
+    )
+    out = subprocess.run(
+        [sys.executable, str(tmp_path / "bench.py"), "q1_groupby_agg"],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = out.stdout.splitlines()
+    assert len(lines) == 1, out.stdout
+    d = json.loads(lines[0])
+    assert list(d) == ["q1_groupby_agg"]
+    assert len(d["q1_groupby_agg"]["runs"]) == 1
+    assert d["q1_groupby_agg"]["min"] == d["q1_groupby_agg"]["runs"][0]
+    assert list(tmp_path.glob("BENCH_DETAIL*.json")) == []

@@ -1,5 +1,6 @@
-"""``catalog.load_table``'s schema memo: one inference job per file
-version and schema-relevant session settings, none after that."""
+"""``catalog.load_table``'s schema memo (one inference job per file
+version and schema-relevant session settings, none after that), and
+the format routing every STORE shares with LOAD."""
 
 from __future__ import annotations
 
@@ -7,8 +8,9 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
-from cubert_spark.catalog import load_table
+from cubert_spark.catalog import load, load_table, store_clustered, store_zorder
 
 
 def test_repeated_load_fires_no_job(spark, jobs_in, tmp_path):
@@ -45,3 +47,20 @@ def test_memo_keyed_on_schema_settings(spark, tmp_path):
         assert load_table(spark, str(tmp_path), "t").schema["b"].dataType.simpleString() == "string"
     finally:
         spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("fmt", ["text", "avro"])
+@pytest.mark.parametrize("writer", ["store_clustered", "store_zorder"])
+def test_layout_stores_roundtrip_through_load(spark, tmp_path, writer, fmt):
+    """The layout-aware STOREs route formats like ``store``: TEXT is
+    tab-separated, so ``load(..., "text")`` reads every field back, and
+    AVRO goes to the built-in avro source rather than a missing jar."""
+    rows = [(i, f"v{i}") for i in range(20)]
+    df = spark.createDataFrame(rows, "k INT, v STRING")
+    out = str(tmp_path / "out")
+    if writer == "store_clustered":
+        store_clustered(df, out, cluster_by=["k"], fmt=fmt)
+    else:
+        store_zorder(df, out, zorder_by=["k"], fmt=fmt)
+    back = load(spark, out, fmt, schema="INT k, STRING v")
+    assert sorted(tuple(r) for r in back.collect()) == rows

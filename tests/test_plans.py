@@ -20,6 +20,19 @@ from cubert_spark.plans import (
 SF = "/root/testdata/sf0.001"
 
 
+@pytest.fixture(scope="module")
+def swept_plans(spark):
+    """Every declared and folded query built once at SF, shared by the
+    lint sweep and the 1000x advisor sweep: building is most of each
+    sweep's time, and both only read the plan. Nothing in this module
+    resets materializations or releases checkpoints, so a plan built
+    here stays valid for every reader."""
+    from cubert_spark.queries import all_queries, folded_queries
+
+    merged = {**all_queries(), **folded_queries()}
+    return {name: fn(spark, SF) for name, fn in sorted(merged.items())}
+
+
 def test_filter_pushdown_reaches_scan(spark):
     from cubert_spark.queries.core import q_generate_filter
 
@@ -490,16 +503,13 @@ _LINT_ALLOWED = {
 }
 
 
-def test_all_declared_queries_lint_clean(spark):
+def test_all_declared_queries_lint_clean(swept_plans):
     """Every query in the declared inventory passes plans.lint, except
     the documented small-side/non-equi cases — and those only raise
     their allowed warning classes. A new anti-pattern anywhere in the
     inventory fails here."""
-    from cubert_spark.queries import all_queries, folded_queries
-
-    merged = {**all_queries(), **folded_queries()}
-    for name, fn in sorted(merged.items()):
-        ws = lint(fn(spark, SF))
+    for name, df in swept_plans.items():
+        ws = lint(df)
         allowed = _LINT_ALLOWED.get(name, ())
         unexpected = [w for w in ws if not any(a in w for a in allowed)]
         assert unexpected == [], (name, unexpected)
@@ -998,7 +1008,7 @@ _ADVISOR_FLIP_WAIVERS: dict[str, str] = {
 }
 
 
-def test_advisor_1000x_sweep_no_unwaived_flips(spark):
+def test_advisor_1000x_sweep_no_unwaived_flips(swept_plans):
     """The 100x-scale review as a regression gate (r6 VERDICT task 3):
     plans.advisor.scale_projection at 1000x over EVERY query (declared
     + folded). A broadcast->shuffle plan flip, or a scan-derived
@@ -1009,13 +1019,11 @@ def test_advisor_1000x_sweep_no_unwaived_flips(spark):
     missing-stats sentinel, not a measurement) are excluded — the
     gate reads only the signals the advisor itself labels reliable."""
     from cubert_spark.plans.advisor import scale_projection
-    from cubert_spark.queries import all_queries, folded_queries
 
-    merged = {**all_queries(), **folded_queries()}
     flagged: dict[str, list[str]] = {}
-    for name, fn in sorted(merged.items()):
+    for name, df in swept_plans.items():
         probs = []
-        for f in scale_projection(fn(spark, SF), 1000.0):
+        for f in scale_projection(df, 1000.0):
             if f.node == "Join(side)":
                 probs.append(f"flip now={f.est_bytes_now}B")
             elif (
