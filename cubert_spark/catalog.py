@@ -291,6 +291,11 @@ def store_clustered(
     from pyspark.sql import functions as F
 
     fmt = _resolve_format(df.sparkSession, fmt, options)
+    if partition_by and fmt == "cubert_avro":
+        raise ValueError(
+            "an AVRO store takes no partition_by: the cubert_avro source "
+            "writes no partition directories"
+        )
     out = df
     if cluster_by:
         cols = [F.col(c) for c in cluster_by]

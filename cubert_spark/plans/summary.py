@@ -19,18 +19,28 @@ Spark-first translation:
   storage optimization of exactly this relation; parquet
   dictionary+RLE gets most of that compression for free.) Without a
   ``distinct_col`` the grain is (day, dims).
-- ``incremental_update`` appends only days missing from the store
-  (the SummaryRewriter delta logic) in one write job, so a failed
-  update leaves the store as it was.
-- ``rewrite`` answers a (date-range, dims, aggs) query with one
-  aggregation over the in-range summary rows unioned with the
-  partials of fact days not yet summarized.
+- The table is a list of **segments**, ``partials/seg=NNNNN/``: each
+  ``build``, ``incremental_update`` or ``append_partials`` writes one
+  new segment in one write job, which observes the days it wrote.
+- A **commit record** (``commit.json``, CubertMD's role) holds the
+  partials' schema, the committed segments and the summarized day set
+  as runs. It is replaced by atomic rename only after the segment's
+  write succeeded, and reads take only its segments under its schema:
+  a failed write, or a crash between write and commit, leaves the
+  store as it was, and the retry overwrites the uncommitted segment.
+- ``incremental_update`` appends only days missing from the record
+  (the SummaryRewriter delta logic); ``rewrite`` answers a
+  (date-range, dims, aggs) query with one aggregation over the
+  in-range summary rows unioned with the partials of fact days the
+  record does not hold. Neither scans the store to learn its days,
+  and neither infers its schema.
 
 Exactness: SUM over DECIMAL or integral columns, COUNT, MIN, MAX and
 COUNT(DISTINCT) re-aggregate to exactly the direct aggregation at any
 grain. A SUM over a DOUBLE column is a sum of partial sums, so it
 matches the direct SUM only up to floating-point summation order;
-cast the measure to DECIMAL for an exact answer.
+cast the measure to DECIMAL for an exact answer. Rows whose day is
+null are in no day range, so no answer counts them.
 
 At 100 TB: the fact scan happens once per new day; every reporting
 query over a trailing window reads only the summary rows of its days.
@@ -38,22 +48,34 @@ query over a trailing window reads only the summary rows of its days.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
+import shutil
 from dataclasses import dataclass
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DateType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
-#: Additive measures: AGG -> (partial fn, merge fn). A COUNT over no
-#: rows is 0, not the NULL a SUM of no partials gives.
+#: Additive measures: AGG -> (partial fn, merge fn). COUNT(c) counts
+#: non-null ``c``, as SQL does; a COUNT over no rows is 0, not the
+#: NULL a SUM of no partials gives.
 _ADDITIVE = {
     "SUM": (F.sum, F.sum),
-    "COUNT": (lambda c: F.count(F.lit(1)), lambda c: F.coalesce(F.sum(c), F.lit(0))),
+    "COUNT": (F.count, lambda c: F.coalesce(F.sum(c), F.lit(0))),
     "MIN": (F.min, F.min),
     "MAX": (F.max, F.max),
 }
+
+_ONE_DAY = dt.timedelta(days=1)
 
 
 @dataclass
@@ -88,9 +110,38 @@ def _day(col: Column) -> Column:
     return F.to_date(col)
 
 
+def _as_date(x) -> dt.date:
+    if isinstance(x, dt.datetime):
+        return x.date()
+    if isinstance(x, dt.date):
+        return x
+    return dt.date.fromisoformat(str(x)[:10])
+
+
+def _to_runs(days: set[dt.date]) -> list[list[str]]:
+    """``days`` as sorted ``[first, last]`` ISO-date runs."""
+    runs: list[list[dt.date]] = []
+    for d in sorted(days):
+        if runs and runs[-1][1] + _ONE_DAY == d:
+            runs[-1][1] = d
+        else:
+            runs.append([d, d])
+    return [[a.isoformat(), b.isoformat()] for a, b in runs]
+
+
+def _from_runs(runs: list[list[str]]) -> set[dt.date]:
+    days = set()
+    for a, b in runs:
+        d, last = dt.date.fromisoformat(a), dt.date.fromisoformat(b)
+        while d <= last:
+            days.add(d)
+            d += _ONE_DAY
+    return days
+
+
 class SummaryStore:
-    """Materialized daily summary at ``path`` (CubertMD-style metadata
-    in meta.json next to the parquet table)."""
+    """Materialized daily summary at ``path``: the spec in meta.json,
+    the commit record in commit.json, the segments under partials/."""
 
     def __init__(
         self,
@@ -137,6 +188,24 @@ class SummaryStore:
     def table_path(self) -> str:
         return os.path.join(self.path, "partials")
 
+    @property
+    def _record_path(self) -> str:
+        return os.path.join(self.path, "commit.json")
+
+    def _record(self) -> dict:
+        """The commit record; an empty store before the first commit."""
+        try:
+            with open(self._record_path) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {"schema": None, "segments": [], "days": []}
+
+    def _commit(self, record: dict) -> None:
+        tmp = self._record_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(record, f)
+        os.replace(tmp, self._record_path)
+
     def _partials(self, fact: DataFrame) -> DataFrame:
         """Additive partials of ``fact`` at (day, dims[, member]) grain."""
         s = self.spec
@@ -148,29 +217,91 @@ class SummaryStore:
         ]
         return fact.groupBy(*keys).agg(*aggs)
 
-    def _write(self, partials: DataFrame, mode: str) -> None:
-        """``__day`` is kept as a sorted data column rather than a Hive
-        partition dir: parquet row-group min/max stats give the same
-        range pruning without one-tiny-file-per-day explosion (1000s
-        of days x dims would otherwise dominate scan setup). One table
-        means one write job: a failed task aborts the job, and none of
-        the update's rows are committed."""
-        self._shrink(partials).sortWithinPartitions("__day").write.mode(mode).parquet(
-            self.table_path
-        )
+    def _on_days(self, fact: DataFrame, days: list[dt.date]) -> Column:
+        """Rows of ``fact`` whose day is in ``days`` (sorted). The hull
+        is a range on the raw time column, which the scan pushes down;
+        a STRING column compares on its ``to_date``. Only a hull with
+        holes adds one IN set of the listed days or of the holes,
+        whichever is shorter, parsed from one SQL string: one predicate
+        per run makes an OR chain that exhausts the optimizer's
+        iterations and overflows the stack on a fragmented day set."""
+        if not days:
+            return F.lit(False)
+        t = self.spec.time_col
+        lo, hi = days[0], days[-1]
+        if isinstance(fact.schema[t].dataType, (DateType, TimestampType, TimestampNTZType)):
+            pred = (F.col(t) >= F.lit(lo)) & (F.col(t) < F.lit(hi + _ONE_DAY))
+        else:
+            pred = _day(F.col(t)).between(F.lit(lo), F.lit(hi))
+        span = (hi - lo).days + 1
+        if span > len(days):
+            have = set(days)
+            holes = [d for d in (lo + _ONE_DAY * i for i in range(span)) if d not in have]
 
-    def _read(self, spark: SparkSession) -> DataFrame | None:
-        """The summary table, or None before the first write. Callers
-        read it once and derive the day set from the same relation, so
-        each call pays one schema inference."""
-        if not os.path.exists(self.table_path):
+            def in_set(members: list[dt.date]) -> Column:
+                listed = ", ".join(f"DATE'{d}'" for d in members)
+                return F.expr(f"to_date(`{t.replace('`', '``')}`) IN ({listed})")
+
+            pred = pred & (in_set(days) if len(days) <= len(holes) else ~in_set(holes))
+        return pred
+
+    def _append(self, fact: DataFrame, record: dict) -> set[dt.date]:
+        """Write the partials of ``fact`` as the next segment and commit
+        it; returns the days the segment holds. ``__day`` is kept as a
+        sorted data column rather than a Hive partition dir: parquet
+        row-group min/max stats give the same range pruning without
+        one-tiny-file-per-day explosion. The write is one job, which
+        also observes the segment's days and rows; a segment of no
+        rows is dropped uncommitted."""
+        partials = self._partials(fact)
+        schema = StructType([StructField(f.name, f.dataType) for f in partials.schema])
+        if record["schema"] not in (None, schema.jsonValue()):
+            raise ValueError(
+                f"partials schema {schema.simpleString()} differs from the store's "
+                f"{StructType.fromJson(record['schema']).simpleString()}"
+            )
+        segments = record["segments"]
+        seg = "seg=%05d" % (int(segments[-1].split("=")[1]) + 1 if segments else 0)
+        path = os.path.join(self.table_path, seg)
+        seen = Observation()
+        observed = partials.observe(
+            seen, F.collect_set("__day").alias("days"), F.count(F.lit(1)).alias("rows")
+        )
+        # overwrite: a segment left uncommitted by a crash is replaced
+        self._shrink(observed).sortWithinPartitions("__day").write.mode(
+            "overwrite"
+        ).parquet(path)
+        got = seen.get
+        if not got["rows"]:
+            shutil.rmtree(path, ignore_errors=True)
+            return set()
+        days = set(got["days"])
+        self._commit(
+            {
+                "schema": schema.jsonValue(),
+                "segments": [*segments, seg],
+                "days": _to_runs(_from_runs(record["days"]) | days),
+            }
+        )
+        return days
+
+    def _read(self, spark: SparkSession, record: dict) -> DataFrame | None:
+        """The committed segments under the recorded schema (no
+        inference job), or None before the first commit."""
+        if not record["segments"]:
             return None
-        return spark.read.parquet(self.table_path)
+        return spark.read.schema(StructType.fromJson(record["schema"])).parquet(
+            *[os.path.join(self.table_path, seg) for seg in record["segments"]]
+        )
 
     # -- build ------------------------------------------------------------
     def build(self, fact: DataFrame) -> None:
-        """Full (re)build of the summary from the fact table."""
-        self._write(self._partials(fact), "overwrite")
+        """Full (re)build of the summary from the fact table. The old
+        record and segments are dropped first."""
+        if os.path.exists(self._record_path):
+            os.remove(self._record_path)
+        shutil.rmtree(self.table_path, ignore_errors=True)
+        self._append(fact, self._record())
 
     def append_partials(self, fact: DataFrame) -> None:
         """Append partial summary rows for ``fact`` WITHOUT the new-day
@@ -178,37 +309,28 @@ class SummaryStore:
         fraction of a day; ``rewrite`` merge-aggregates partial rows,
         so appends are additive). The caller owns exactly-once
         delivery (streaming checkpoint)."""
-        self._write(self._partials(fact), "append")
+        self._append(fact, self._record())
 
     def summarized_days(self, spark: SparkSession) -> set:
-        summary = self._read(spark)
-        if summary is None:
-            return set()
-        return {r["__day"] for r in summary.select("__day").distinct().collect()}
+        """The committed day set, from the record alone."""
+        return _from_runs(self._record()["days"])
 
     def incremental_update(self, spark: SparkSession, fact: DataFrame) -> int:
         """Append summary rows for fact days not yet summarized
-        (SummaryRewriter's only-new-days consumption). Returns the
-        number of new days. Day membership via broadcast anti-join —
-        never a literal IN-list of dates (thousands of literals wreck
-        both planning time and codegen; a broadcast join does not)."""
-        s = self.spec
-        summary = self._read(spark)
-        if summary is not None:
-            fact = fact.join(
-                F.broadcast(summary.select("__day").distinct()),
-                _day(F.col(s.time_col)) == F.col("__day"),
-                "left_anti",
-            )
-        # the count and the write share one computation of the delta
-        partials = self._partials(fact).persist()
-        try:
-            new_days = partials.select("__day").distinct().count()
-            if new_days:
-                self._write(partials, "append")
-            return new_days
-        finally:
-            partials.unpersist()
+        (SummaryRewriter's only-new-days consumption) in one write job.
+        Returns the number of new days. The summarized days come from
+        the commit record, and the fact is filtered by a range on the
+        time column plus, when the day set has holes, one IN set (see
+        ``_on_days``). Measured on sf0.1 orders (150,000 rows, local[4]
+        on 4 cores), against the range alone: an IN set of 2,400 dates
+        adds about 60 ms of planning and 110 ms of exec; a broadcast
+        semi-join of the same days adds no planning but 330 ms of
+        exec."""
+        record = self._record()
+        done = sorted(_from_runs(record["days"]))
+        if done:
+            fact = fact.filter(~self._on_days(fact, done))
+        return len(self._append(fact, record))
 
     # -- rewrite ----------------------------------------------------------
     def rewrite(
@@ -235,22 +357,16 @@ class SummaryStore:
                 f"group_dims {unknown} are not stored dims {list(s.dims)}; "
                 "the summary can only roll up stored dims"
             )
-        start_d = F.lit(start).cast("date")
-        end_d = F.lit(end).cast("date")
+        lo, hi = _as_date(start), _as_date(end)
+        record = self._record()
+        done = _from_runs(record["days"])
+        window = [lo + _ONE_DAY * i for i in range((hi - lo).days + 1)]
+        missing = [d for d in window if d not in done]
 
-        day = _day(F.col(s.time_col))
-        missing_fact = fact.filter(day.between(start_d, end_d))
-        rows = self._read(spark)
-        if rows is not None:
-            rows = rows.filter(F.col("__day").between(start_d, end_d))
-            # days NOT in the summary (range pruning on the scan still
-            # applies to both sides)
-            missing_fact = missing_fact.join(
-                F.broadcast(rows.select("__day").distinct()), day == F.col("__day"), "left_anti"
-            )
-            rows = rows.unionByName(self._partials(missing_fact))
-        else:
-            rows = self._partials(missing_fact)
+        rows = self._partials(fact.filter(self._on_days(fact, missing)))
+        if len(missing) < len(window):
+            summary = self._read(spark, record)
+            rows = summary.filter(F.col("__day").between(F.lit(lo), F.lit(hi))).unionByName(rows)
 
         aggs = [
             _ADDITIVE[a][1](F.col(f"{a.lower()}__{c}")).alias(f"{a.lower()}__{c}")

@@ -64,3 +64,14 @@ def test_layout_stores_roundtrip_through_load(spark, tmp_path, writer, fmt):
         store_zorder(df, out, zorder_by=["k"], fmt=fmt)
     back = load(spark, out, fmt, schema="INT k, STRING v")
     assert sorted(tuple(r) for r in back.collect()) == rows
+
+
+def test_partitioned_avro_store_is_refused(spark, tmp_path):
+    """The AVRO source writes no partition directories, so a
+    partitioned AVRO STORE fails before it writes anything, naming the
+    limit, rather than inside Spark."""
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(4)], "k INT, v STRING")
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="AVRO store takes no partition_by"):
+        store_clustered(df, str(out), partition_by=["k"], fmt="avro")
+    assert not out.exists()
