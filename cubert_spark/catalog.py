@@ -7,8 +7,13 @@ Parquet, where schema, column pruning and predicate pushdown are native.
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import shutil
 import stat
+import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -132,8 +137,6 @@ def _is_uri_schemed(path: str) -> bool:
     """True for scheme://-prefixed paths (hdfs://, s3a://, file://).
     The single detection rule shared by every local-FS-contract guard
     in this module, so the guards cannot drift apart."""
-    import re
-
     return bool(re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path))
 
 
@@ -406,8 +409,6 @@ def merge_upsert(
     partitions rewrite. Commit = write to a scratch dir then swap
     (the plain-parquet stand-in for a table format's atomic commit;
     readers mid-swap need a real table format — documented limit)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     base = spark.read.parquet(path)
@@ -449,8 +450,6 @@ def vacuum_versions(
     ``#LATEST`` resolves to) is never deletable through this API.
     Local-FS here; on an object store the rmtree becomes a prefix
     delete."""
-    import shutil
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     # the SAME candidate set resolve_latest uses (files and dirs), so
@@ -477,8 +476,6 @@ class TxConflictError(RuntimeError):
 
 
 def _txlog_dir(path: str) -> str:
-    import os
-
     # the tx log's compare-and-swap is os.link create-exclusive —
     # POSIX-local by construction. A URI-schemed path (hdfs://,
     # s3a://) would NOT error here: os.makedirs would silently create
@@ -498,9 +495,6 @@ def _txlog_dir(path: str) -> str:
 
 def tx_versions(path: str) -> list[int]:
     """Committed versions of a tx table, ascending (empty if none)."""
-    import os
-    import re
-
     d = _txlog_dir(path)
     if not os.path.isdir(d):
         return []
@@ -512,11 +506,18 @@ def tx_versions(path: str) -> list[int]:
     return sorted(out)
 
 
+def _manifest(path: str, version: int) -> dict:
+    """The manifest of committed ``version``: its version, mode, file
+    list and, if the commit recorded one, ``meta``."""
+    with open(os.path.join(_txlog_dir(path), f"v{version}.json")) as fh:
+        return json.load(fh)
+
+
 def tx_commit(
     df: DataFrame,
     path: str,
     mode: str = "append",
-    meta: dict | None = None,
+    meta: dict | Callable[[], dict] | None = None,
     retries: int = 0,
     abort_if=None,
     on_conflict: str = "fail",
@@ -565,13 +566,18 @@ def tx_commit(
       attempt, so exactly-once callers keep their guard under LWW.
     - ``abort_if`` (zero-arg callable) is re-evaluated at the top of
       EVERY publish attempt, after the head re-read would happen:
-      returning True abandons the commit and tx_commit returns 0 (the
-      written data dir is an inert, vacuumable orphan). This is how
-      idempotent callers keep exactly-once under rebase — tx_sink
+      returning True abandons the commit, deletes this attempt's data
+      dir (no manifest references it) and tx_commit returns 0. This is
+      how idempotent callers keep exactly-once under rebase — tx_sink
       passes "was my batch_id already committed?", so a zombie
       attempt that loses the race to its own replay re-checks and
       aborts instead of rebasing a duplicate in (a plain retries
-      loop would happily commit the same batch twice).
+      loop would happily commit the same batch twice) — and how a
+      caller drops a write that turned out to hold no rows.
+    - ``meta`` (a JSON-able dict, recorded in the manifest) may be a
+      zero-arg callable instead, evaluated once after the data write:
+      a write observed with ``DataFrame.observe`` records what it saw
+      (days, row counts) in the same commit.
 
     Returns the committed version number (1-based), or 0 if
     ``abort_if`` abandoned the commit.
@@ -579,9 +585,6 @@ def tx_commit(
     version; storage is reclaimed only by dropping whole versions
     (files referenced by any retained manifest are never rewritten).
     """
-    import json
-    import os
-
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tx_commit: unknown mode {mode!r}")
     if on_conflict not in ("fail", "last_writer_wins"):
@@ -600,8 +603,6 @@ def tx_commit(
                 "budget to opt in"
             )
     _txlog_dir(path)  # validate the local-path contract BEFORE writing data
-    import uuid
-
     # attempt-unique data dir: a commit that died after writing data
     # but before the manifest rename leaves only an orphan directory
     # no manifest references — the retry writes fresh files instead
@@ -615,6 +616,8 @@ def tx_commit(
         for f in sorted(os.listdir(data_dir))
         if f.endswith(".parquet")
     ]
+    if callable(meta):
+        meta = meta()
     attempts_left = max(0, int(retries))
     while True:
         versions = tx_versions(path)
@@ -626,13 +629,14 @@ def tx_commit(
         # a window where a commit lands between check and read and we
         # link cleanly on top of it — a double commit.
         if abort_if is not None and abort_if():
-            return 0  # superseded (e.g. replayed batch already landed)
+            # superseded (e.g. replayed batch already landed) or empty
+            shutil.rmtree(data_dir)
+            return 0
         parent = versions[-1] if versions else 0
         n = parent + 1
         files = list(new_files)
         if mode == "append" and parent:
-            with open(os.path.join(_txlog_dir(path), f"v{parent}.json")) as fh:
-                files = json.load(fh)["files"] + files
+            files = _manifest(path, parent)["files"] + files
         os.makedirs(_txlog_dir(path), exist_ok=True)
         manifest = {"version": n, "mode": mode, "files": files}
         if meta:
@@ -683,17 +687,13 @@ def tx_files(path: str, version: int | None = None) -> list[str]:
     relative to ``path`` — the snapshot's exact file set. Public so
     delta readers (plans.ivm.tx_delta) can diff two snapshots at
     manifest level instead of re-scanning data."""
-    import json
-    import os
-
     versions = tx_versions(path)
     if not versions:
         raise FileNotFoundError(f"no tx log at {path}")
     v = versions[-1] if version is None else version
     if v not in versions:
         raise ValueError(f"version {v} not in {versions}")
-    with open(os.path.join(_txlog_dir(path), f"v{v}.json")) as fh:
-        return json.load(fh)["files"]
+    return _manifest(path, v)["files"]
 
 
 def tx_read(
@@ -709,8 +709,6 @@ def tx_read(
     evolved (a later append added a column — the mergeSchema path the
     schema_evolution row proves for plain directories, here scoped to
     exactly the snapshot's files)."""
-    import os
-
     files = tx_files(path, version)
     reader = spark.read
     if merge_schema:
@@ -719,15 +717,12 @@ def tx_read(
 
 
 def tx_committed_batches(path: str) -> set:
-    """batch ids recorded by ``tx_sink`` commits (for exactly-once
-    retry skipping)."""
-    import json
-    import os
-
+    """batch ids recorded in commit meta by ``tx_sink`` and
+    ``SummaryStore.append_partials`` (for exactly-once retry
+    skipping)."""
     out = set()
     for v in tx_versions(path):
-        with open(os.path.join(_txlog_dir(path), f"v{v}.json")) as fh:
-            m = json.load(fh).get("meta", {})
+        m = _manifest(path, v).get("meta", {})
         if "batch_id" in m:
             out.add(m["batch_id"])
     return out
@@ -788,10 +783,6 @@ def tx_vacuum(path: str, keep_last: int = 1) -> dict:
     Returns {"kept_versions", "deleted_manifests", "deleted_files"}.
     Single-writer assumption as tx_commit; do not vacuum concurrently
     with a commit."""
-    import json
-    import os
-    import shutil
-
     if keep_last < 1:
         raise ValueError("tx_vacuum: keep_last must be >= 1")
     versions = tx_versions(path)
@@ -805,8 +796,7 @@ def tx_vacuum(path: str, keep_last: int = 1) -> dict:
         os.remove(os.path.join(_txlog_dir(path), f"v{v}.json"))
     referenced = set()
     for v in kept:
-        with open(os.path.join(_txlog_dir(path), f"v{v}.json")) as fh:
-            referenced.update(json.load(fh)["files"])
+        referenced.update(_manifest(path, v)["files"])
     deleted = 0
     data_root = os.path.join(path, "data")
     if os.path.isdir(data_root):
@@ -835,13 +825,9 @@ def tx_history(spark: SparkSession, path: str) -> DataFrame:
     the tx table (audit surface for tx_sink exactly-once claims and
     vacuum decisions). Driver-side manifest reads: manifests are
     O(versions) tiny JSON files, never data-scaled."""
-    import json
-    import os
-
     rows = []
     for v in tx_versions(path):
-        with open(os.path.join(_txlog_dir(path), f"v{v}.json")) as fh:
-            m = json.load(fh)
+        m = _manifest(path, v)
         rows.append(
             (
                 m["version"],

@@ -19,20 +19,21 @@ Spark-first translation:
   storage optimization of exactly this relation; parquet
   dictionary+RLE gets most of that compression for free.) Without a
   ``distinct_col`` the grain is (day, dims).
-- The table is a list of **segments**, ``partials/seg=NNNNN/``: each
-  ``build``, ``incremental_update`` or ``append_partials`` writes one
-  new segment in one write job, which observes the days it wrote.
-- A **commit record** (``commit.json``, CubertMD's role) holds the
-  partials' schema, the committed segments and the summarized day set
-  as runs. It is replaced by atomic rename only after the segment's
-  write succeeded, and reads take only its segments under its schema:
-  a failed write, or a crash between write and commit, leaves the
-  store as it was, and the retry overwrites the uncommitted segment.
-- ``incremental_update`` appends only days missing from the record
+- The table is a ``catalog`` tx table: ``build`` is one overwrite
+  commit (older versions are then vacuumed), ``incremental_update``
+  and ``append_partials`` one append commit each. Every commit is one
+  write job, which observes the days and rows it wrote.
+- The head **manifest's meta** (CubertMD's role) holds the partials'
+  schema and the summarized day set as runs, published with the file
+  set by the tx log's atomic link. Reads take only the head's files
+  under its schema: a failed write, or a crash before the publish
+  (``build``'s included), leaves the store as it was, and the retry
+  writes a fresh data dir. A write of no rows commits nothing.
+- ``incremental_update`` appends only days missing from the head
   (the SummaryRewriter delta logic); ``rewrite`` answers a
   (date-range, dims, aggs) query with one aggregation over the
   in-range summary rows unioned with the partials of fact days the
-  record does not hold. Neither scans the store to learn its days,
+  head does not hold. Neither scans the store to learn its days,
   and neither infers its schema.
 
 Exactness: SUM over DECIMAL or integral columns, COUNT, MIN, MAX and
@@ -51,7 +52,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import shutil
 from dataclasses import dataclass
 from collections.abc import Sequence
 
@@ -65,6 +65,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from cubert_spark import catalog
+
 #: Additive measures: AGG -> (partial fn, merge fn). COUNT(c) counts
 #: non-null ``c``, as SQL does; a COUNT over no rows is 0, not the
 #: NULL a SUM of no partials gives.
@@ -76,6 +78,12 @@ _ADDITIVE = {
 }
 
 _ONE_DAY = dt.timedelta(days=1)
+
+#: Files per commit. The summary table is compact by design (days x
+#: dims [x member]); writing it at full shuffle width scatters a small
+#: table over many tiny files, and every rewrite pays the per-file
+#: open cost back (30% of build+query measured at sf0.1).
+_COALESCE_FILES = 8
 
 
 @dataclass
@@ -141,23 +149,17 @@ def _from_runs(runs: list[list[str]]) -> set[dt.date]:
 
 class SummaryStore:
     """Materialized daily summary at ``path``: the spec in meta.json,
-    the commit record in commit.json, the segments under partials/."""
+    the partials as a ``catalog`` tx table whose head manifest's meta
+    holds their schema and day set."""
 
-    def __init__(
-        self,
-        path: str,
-        spec: SummarySpec | None = None,
-        coalesce_files: int | None = 8,
-    ):
-        from cubert_spark.catalog import _is_uri_schemed
-
+    def __init__(self, path: str, spec: SummarySpec | None = None):
         # meta.json and the existence probes below use local-FS
         # semantics (open/os.path.exists); on hdfs://s3a:// those
         # silently report "no summary" and os.makedirs would create a
         # literal local "hdfs:" directory — the same wrong-results
         # class the streaming state probes guard against. Refuse
         # loudly instead of corrupting.
-        if _is_uri_schemed(path):
+        if catalog._is_uri_schemed(path):
             raise ValueError(
                 f"SummaryStore path {path!r} is URI-schemed; the store's "
                 "metadata/existence probes are local-FS-only. Point it at "
@@ -173,38 +175,14 @@ class SummaryStore:
             with open(meta, "w") as f:
                 f.write(spec.to_json())
         self.spec = spec
-        #: The summary table is compact by design (days x dims [x
-        #: member]); writing it at full shuffle width scatters a small
-        #: table over many tiny files, and every rewrite pays the
-        #: per-file open cost back (30% of build+query measured at
-        #: sf0.1). Set to None for a summary whose member grain is
-        #: genuinely large.
-        self.coalesce_files = coalesce_files
 
-    def _shrink(self, df: DataFrame) -> DataFrame:
-        return df.coalesce(self.coalesce_files) if self.coalesce_files else df
-
-    @property
-    def table_path(self) -> str:
-        return os.path.join(self.path, "partials")
-
-    @property
-    def _record_path(self) -> str:
-        return os.path.join(self.path, "commit.json")
-
-    def _record(self) -> dict:
-        """The commit record; an empty store before the first commit."""
-        try:
-            with open(self._record_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"schema": None, "segments": [], "days": []}
-
-    def _commit(self, record: dict) -> None:
-        tmp = self._record_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.replace(tmp, self._record_path)
+    def _head(self) -> dict:
+        """The head manifest's files and meta; an empty store before
+        the first commit."""
+        versions = catalog.tx_versions(self.path)
+        if not versions:
+            return {"files": [], "meta": {"schema": None, "days": []}}
+        return catalog._manifest(self.path, versions[-1])
 
     def _partials(self, fact: DataFrame) -> DataFrame:
         """Additive partials of ``fact`` at (day, dims[, member]) grain."""
@@ -224,12 +202,14 @@ class SummaryStore:
         holes adds one IN set of the listed days or of the holes,
         whichever is shorter, parsed from one SQL string: one predicate
         per run makes an OR chain that exhausts the optimizer's
-        iterations and overflows the stack on a fragmented day set."""
+        iterations and overflows the stack on a fragmented day set. The
+        set tests a DATE column itself, any other type its ``to_date``."""
         if not days:
             return F.lit(False)
         t = self.spec.time_col
+        typ = fact.schema[t].dataType
         lo, hi = days[0], days[-1]
-        if isinstance(fact.schema[t].dataType, (DateType, TimestampType, TimestampNTZType)):
+        if isinstance(typ, (DateType, TimestampType, TimestampNTZType)):
             pred = (F.col(t) >= F.lit(lo)) & (F.col(t) < F.lit(hi + _ONE_DAY))
         else:
             pred = _day(F.col(t)).between(F.lit(lo), F.lit(hi))
@@ -237,100 +217,108 @@ class SummaryStore:
         if span > len(days):
             have = set(days)
             holes = [d for d in (lo + _ONE_DAY * i for i in range(span)) if d not in have]
+            day = f"`{t.replace('`', '``')}`"
+            if not isinstance(typ, DateType):
+                day = f"to_date({day})"
 
             def in_set(members: list[dt.date]) -> Column:
                 listed = ", ".join(f"DATE'{d}'" for d in members)
-                return F.expr(f"to_date(`{t.replace('`', '``')}`) IN ({listed})")
+                return F.expr(f"{day} IN ({listed})")
 
             pred = pred & (in_set(days) if len(days) <= len(holes) else ~in_set(holes))
         return pred
 
-    def _append(self, fact: DataFrame, record: dict) -> set[dt.date]:
-        """Write the partials of ``fact`` as the next segment and commit
-        it; returns the days the segment holds. ``__day`` is kept as a
-        sorted data column rather than a Hive partition dir: parquet
-        row-group min/max stats give the same range pruning without
-        one-tiny-file-per-day explosion. The write is one job, which
-        also observes the segment's days and rows; a segment of no
-        rows is dropped uncommitted."""
+    def _commit(
+        self, fact: DataFrame, head: dict | None, batch_id: int | None = None
+    ) -> set[dt.date]:
+        """Commit the partials of ``fact``, appended on ``head`` or,
+        when ``head`` is None, replacing the table; returns the days
+        they hold. ``__day`` is kept as a sorted data column rather
+        than a Hive partition dir: parquet row-group min/max stats give
+        the same range pruning without one-tiny-file-per-day explosion.
+        The write is one job, which also observes the days and rows the
+        manifest meta records; an append of no rows, or of a
+        ``batch_id`` already committed, is abandoned uncommitted."""
         partials = self._partials(fact)
         schema = StructType([StructField(f.name, f.dataType) for f in partials.schema])
-        if record["schema"] not in (None, schema.jsonValue()):
+        recorded = head["meta"]["schema"] if head else None
+        if recorded not in (None, schema.jsonValue()):
             raise ValueError(
                 f"partials schema {schema.simpleString()} differs from the store's "
-                f"{StructType.fromJson(record['schema']).simpleString()}"
+                f"{StructType.fromJson(recorded).simpleString()}"
             )
-        segments = record["segments"]
-        seg = "seg=%05d" % (int(segments[-1].split("=")[1]) + 1 if segments else 0)
-        path = os.path.join(self.table_path, seg)
         seen = Observation()
         observed = partials.observe(
             seen, F.collect_set("__day").alias("days"), F.count(F.lit(1)).alias("rows")
         )
-        # overwrite: a segment left uncommitted by a crash is replaced
-        self._shrink(observed).sortWithinPartitions("__day").write.mode(
-            "overwrite"
-        ).parquet(path)
-        got = seen.get
-        if not got["rows"]:
-            shutil.rmtree(path, ignore_errors=True)
-            return set()
-        days = set(got["days"])
-        self._commit(
-            {
-                "schema": schema.jsonValue(),
-                "segments": [*segments, seg],
-                "days": _to_runs(_from_runs(record["days"]) | days),
-            }
-        )
-        return days
+        done = _from_runs(head["meta"]["days"]) if head else set()
 
-    def _read(self, spark: SparkSession, record: dict) -> DataFrame | None:
-        """The committed segments under the recorded schema (no
-        inference job), or None before the first commit."""
-        if not record["segments"]:
-            return None
-        return spark.read.schema(StructType.fromJson(record["schema"])).parquet(
-            *[os.path.join(self.table_path, seg) for seg in record["segments"]]
+        def meta() -> dict:
+            days = _to_runs(done | set(seen.get["days"]))
+            m = {"schema": schema.jsonValue(), "days": days}
+            return m if batch_id is None else {**m, "batch_id": batch_id}
+
+        def abandon() -> bool:
+            return head is not None and (not seen.get["rows"] or self._landed(batch_id))
+
+        committed = catalog.tx_commit(
+            observed.coalesce(_COALESCE_FILES).sortWithinPartitions("__day"),
+            self.path,
+            mode="overwrite" if head is None else "append",
+            meta=meta,
+            abort_if=abandon,
+        )
+        return set(seen.get["days"]) if committed else set()
+
+    def _landed(self, batch_id: int | None) -> bool:
+        return batch_id is not None and batch_id in catalog.tx_committed_batches(self.path)
+
+    def _read(self, spark: SparkSession, head: dict) -> DataFrame:
+        """The head's files under the schema its meta records (no
+        inference job)."""
+        return spark.read.schema(StructType.fromJson(head["meta"]["schema"])).parquet(
+            *[os.path.join(self.path, f) for f in head["files"]]
         )
 
     # -- build ------------------------------------------------------------
     def build(self, fact: DataFrame) -> None:
-        """Full (re)build of the summary from the fact table. The old
-        record and segments are dropped first."""
-        if os.path.exists(self._record_path):
-            os.remove(self._record_path)
-        shutil.rmtree(self.table_path, ignore_errors=True)
-        self._append(fact, self._record())
+        """Full (re)build of the summary from the fact table: one
+        overwrite commit, after which older versions and their files
+        are vacuumed. Until the commit lands, reads see the old
+        summary."""
+        self._commit(fact, None)
+        catalog.tx_vacuum(self.path, keep_last=1)
 
-    def append_partials(self, fact: DataFrame) -> None:
+    def append_partials(self, fact: DataFrame, batch_id: int | None = None) -> None:
         """Append partial summary rows for ``fact`` WITHOUT the new-day
         skip — the micro-batch ingestion path (a batch may carry a
         fraction of a day; ``rewrite`` merge-aggregates partial rows,
-        so appends are additive). The caller owns exactly-once
-        delivery (streaming checkpoint)."""
-        self._append(fact, self._record())
+        so appends are additive). A ``batch_id`` is recorded in the
+        commit, and an append whose ``batch_id`` is already committed
+        is skipped, so a replayed micro-batch is counted once."""
+        if not self._landed(batch_id):
+            self._commit(fact, self._head(), batch_id)
 
     def summarized_days(self, spark: SparkSession) -> set:
-        """The committed day set, from the record alone."""
-        return _from_runs(self._record()["days"])
+        """The committed day set, from the head manifest alone."""
+        return _from_runs(self._head()["meta"]["days"])
 
     def incremental_update(self, spark: SparkSession, fact: DataFrame) -> int:
         """Append summary rows for fact days not yet summarized
         (SummaryRewriter's only-new-days consumption) in one write job.
         Returns the number of new days. The summarized days come from
-        the commit record, and the fact is filtered by a range on the
+        the head manifest, and the fact is filtered by a range on the
         time column plus, when the day set has holes, one IN set (see
         ``_on_days``). Measured on sf0.1 orders (150,000 rows, local[4]
         on 4 cores), against the range alone: an IN set of 2,400 dates
         adds about 60 ms of planning and 110 ms of exec; a broadcast
         semi-join of the same days adds no planning but 330 ms of
         exec."""
-        record = self._record()
-        done = sorted(_from_runs(record["days"]))
+        head = self._head()
+        done = sorted(_from_runs(head["meta"]["days"]))
         if done:
             fact = fact.filter(~self._on_days(fact, done))
-        return len(self._append(fact, record))
+        return len(self._commit(fact, head))
 
     # -- rewrite ----------------------------------------------------------
     def rewrite(
@@ -358,14 +346,14 @@ class SummaryStore:
                 "the summary can only roll up stored dims"
             )
         lo, hi = _as_date(start), _as_date(end)
-        record = self._record()
-        done = _from_runs(record["days"])
+        head = self._head()
+        done = _from_runs(head["meta"]["days"])
         window = [lo + _ONE_DAY * i for i in range((hi - lo).days + 1)]
         missing = [d for d in window if d not in done]
 
         rows = self._partials(fact.filter(self._on_days(fact, missing)))
         if len(missing) < len(window):
-            summary = self._read(spark, record)
+            summary = self._read(spark, head)
             rows = summary.filter(F.col("__day").between(F.lit(lo), F.lit(hi))).unionByName(rows)
 
         aggs = [

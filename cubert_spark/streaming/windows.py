@@ -173,13 +173,16 @@ def maintain_summary(stream_df: DataFrame, store) -> "object":
     SummaryRewriter consumption loop — AggregateRewriter.java:54).
     Partials, not whole days: a micro-batch can carry a fraction of a
     day, and ``SummaryStore.rewrite`` merge-aggregates partial rows.
-    Exactly-once comes from the streaming checkpoint.
+    foreachBatch is at-least-once: a batch whose append landed before
+    the checkpoint recorded it is replayed on restart. Each append
+    records its batch id in the store's commit, and a replayed id is
+    skipped, so every batch's partials are counted once.
 
     Returns the started StreamingQuery (availableNow trigger: one
     incremental catch-up pass, the scheduled-ingest pattern)."""
 
-    def update(batch_df: DataFrame, _batch_id: int) -> None:
-        store.append_partials(batch_df)
+    def update(batch_df: DataFrame, batch_id: int) -> None:
+        store.append_partials(batch_df, int(batch_id))
 
     return (
         stream_df.writeStream.foreachBatch(update)

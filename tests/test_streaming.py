@@ -136,6 +136,7 @@ def test_maintain_summary_from_stream(spark, events_dir, tmp_path):
     """foreachBatch incremental maintenance: after one availableNow
     pass over the stream, the store's summary answers match a direct
     batch aggregation of the same fact data."""
+    from cubert_spark import catalog
     from cubert_spark.plans.summary import SummarySpec, SummaryStore
     from cubert_spark.streaming import maintain_summary
 
@@ -150,7 +151,7 @@ def test_maintain_summary_from_stream(spark, events_dir, tmp_path):
     stream = read_parquet_stream(spark, events_dir, batch.schema, max_files_per_trigger=1)
     q = maintain_summary(stream, store)
     q.awaitTermination()
-    summarized = spark.read.parquet(store.table_path)
+    summarized = catalog.tx_read(spark, store.path)
     got = {
         (r["__day"], r["event_type"]): r["count__user_id"]
         for r in summarized.groupBy("__day", "event_type")

@@ -5,12 +5,13 @@ coverage and incremental updates."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from cubert_spark.catalog import load_table
-from cubert_spark.plans import summary
+from cubert_spark import catalog
+from cubert_spark.catalog import load_table, tx_files, tx_versions
 from cubert_spark.plans.summary import SummarySpec, SummaryStore
 
 SF = "/root/testdata/sf0.001"
@@ -221,16 +222,22 @@ def test_failed_update_commits_nothing(spark, fact, tmp_path):
     )
 
 
+def _data_dirs(store):
+    return sorted(os.listdir(os.path.join(store.path, "data")))
+
+
 def test_update_rejects_a_changed_schema(spark, fact, tmp_path):
-    """Segments are read under the schema the record holds, so a fact
-    whose partials would be typed differently is refused before any
-    write."""
+    """The head's files are read under the schema its manifest holds,
+    so a fact whose partials would be typed differently is refused
+    before any write."""
     store = SummaryStore(str(tmp_path / "sm"), SPEC)
     store.build(fact.filter(_day_before("1996-01-01")))
+    built = _data_dirs(store)
     wider = fact.withColumn("price_dec", F.col("o_totalprice").cast("decimal(20,2)"))
     with pytest.raises(ValueError, match="differs from the store's"):
         store.incremental_update(spark, wider)
-    assert sorted(os.listdir(store.table_path)) == ["seg=00000"]
+    assert tx_versions(store.path) == [1]
+    assert _data_dirs(store) == built
 
 
 def test_rewrite_rejects_unstored_dims(spark, fact, tmp_path):
@@ -239,32 +246,82 @@ def test_rewrite_rejects_unstored_dims(spark, fact, tmp_path):
         store.rewrite(spark, fact, "1995-01-01", "1995-12-31", ["o_orderstatus", "o_clerk"])
 
 
+def _crash(src, dst):
+    raise OSError("injected crash before publish")
+
+
 def test_crash_between_write_and_commit(spark, fact, tmp_path, monkeypatch):
-    """A crash after an update's segment is written but before its
-    commit leaves the store as it was: the segment is on disk but
-    unread, and the retry commits its days exactly once."""
+    """A crash after an update's data is written but before its
+    manifest is published leaves the store as it was: the data dir is
+    on disk but in no manifest and unread, and the retry commits its
+    days exactly once."""
     store = SummaryStore(str(tmp_path / "sc"), SPEC)
     store.build(fact.filter(_day_before("1996-01-01")))
     before = store.summarized_days(spark)
     start, end, dims = "1995-01-01", "2001-12-31", ["o_orderpriority", "o_orderstatus"]
     want = _as_dict(_direct(fact, start, end, dims), dims)
 
-    def crash(src, dst):
-        raise OSError("injected crash before commit")
-
     with monkeypatch.context() as m:
-        m.setattr(summary.os, "replace", crash)
+        m.setattr(catalog.os, "link", _crash)
         with pytest.raises(OSError, match="injected crash"):
             store.incremental_update(spark, fact)
-    assert sorted(os.listdir(store.table_path)) == ["seg=00000", "seg=00001"]
+    assert tx_versions(store.path) == [1]
+    orphans = {os.path.join("data", d) for d in _data_dirs(store)} - {
+        os.path.dirname(f) for f in tx_files(store.path)
+    }
+    assert len(orphans) == 1
     assert store.summarized_days(spark) == before
     assert _as_dict(store.rewrite(spark, fact, start, end, dims), dims) == want
 
     added = store.incremental_update(spark, fact)
     assert added > 0
+    assert tx_versions(store.path) == [1, 2]
     assert len(store.summarized_days(spark)) == len(before) + added
+    dirs = _data_dirs(store)
     assert store.incremental_update(spark, fact) == 0
+    assert _data_dirs(store) == dirs  # the empty append left no data dir
     assert _as_dict(store.rewrite(spark, fact, start, end, dims), dims) == want
+
+
+def test_crash_during_rebuild_keeps_the_old_summary(spark, fact, tmp_path, monkeypatch):
+    """A rebuild publishes its file set in one atomic step, so a crash
+    at the publish (the link or rename that would make it visible)
+    leaves the old summary answering, and a rebuild that lands drops
+    the old version and the crashed attempt's data."""
+    store = SummaryStore(str(tmp_path / "sb"), SPEC)
+    store.build(fact.filter(_day_before("1996-01-01")))
+    before = store.summarized_days(spark)
+    start, end, dims = "1995-01-01", "2001-12-31", ["o_orderpriority"]
+    want = _as_dict(_direct(fact, start, end, dims), dims)
+
+    with monkeypatch.context() as m:
+        m.setattr(catalog.os, "link", _crash)
+        m.setattr(catalog.os, "replace", _crash)
+        with pytest.raises(OSError, match="injected crash"):
+            store.build(fact)
+    assert store.summarized_days(spark) == before
+    assert _as_dict(store.rewrite(spark, fact, start, end, dims), dims) == want
+
+    store.build(fact)
+    assert tx_versions(store.path) == [2]
+    assert len(_data_dirs(store)) == 1
+    assert len(store.summarized_days(spark)) > len(before)
+    assert _as_dict(store.rewrite(spark, fact, start, end, dims), dims) == want
+
+
+def test_replayed_batch_is_appended_once(spark, fact, tmp_path):
+    """A micro-batch replayed after its append landed (foreachBatch is
+    at-least-once) is skipped by its recorded batch id, so its COUNT
+    and SUM partials are not counted twice."""
+    store = SummaryStore(str(tmp_path / "sr"), SPEC)
+    early = fact.filter(_day_before("1996-01-01"))
+    store.append_partials(early, batch_id=0)
+    store.append_partials(fact.filter(~_day_before("1996-01-01")), batch_id=1)
+    store.append_partials(early, batch_id=0)
+    assert tx_versions(store.path) == [1, 2]
+    _assert_rewrite_is_direct(
+        spark, store, fact, "1994-01-01", "1998-12-31", ["o_orderpriority", "o_orderstatus"]
+    )
 
 
 @pytest.fixture()
@@ -359,6 +416,9 @@ def test_fragmented_days(spark, tmp_path, optimizer_log, time_type, raw_range):
     spliced = answer()
     pushed = spliced._jdf.queryExecution().executedPlan().toString()
     assert ("GreaterThanOrEqual(ship," in pushed) == raw_range, pushed
+    analyzed = spliced._jdf.queryExecution().analyzed().toString()
+    wrapped = re.search(r"to_date\(ship#\d+[^()]*(\(\w+\)[^()]*)*\) IN \(", analyzed)
+    assert (wrapped is None) == (time_type == "date"), analyzed
     added = store.incremental_update(spark, fact)
     assert added > 1000
     assert store.incremental_update(spark, fact) == 0
