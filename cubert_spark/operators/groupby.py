@@ -75,6 +75,50 @@ def agg_column(spec: str | tuple | Column) -> Column:
     return c.alias(alias)
 
 
+#: Scale of every exact double sum: the 6 decimal places of the
+#: ``DECIMAL(30,6)`` the oracle SQL sums in (queries/_util.dsum_sql).
+_SCALE = 10**6
+
+
+def exact_unscaled(c: Column) -> Column:
+    """``CAST(c AS DECIMAL(30,6)) * 10^6`` as a long-backed
+    ``DECIMAL(36,0)``, bit for bit, without a BigDecimal per row.
+
+    Spark casts a double by rounding its decimal string S
+    (``Decimal.apply(double)`` goes through ``Double.toString``)
+    half-up to 6 places. With ``w = c * 1e6`` in double arithmetic,
+    ``|S * 1e6 - w| <= ~|w| * 2^-52``: half an ulp for S -> c, half an
+    ulp for the product. So whenever ``w`` lies more than
+    ``|w| * 2^-48`` from a half-integer, S rounds to ``rint(w)``, an
+    integer a bigint holds exactly: that is the fast path. The test is
+    evaluated in double, and rounding is monotone, so a computed sum
+    below 0.5 means the exact one is. Its margin term also bounds the
+    fast path to ``|w| < 2^47`` (``|c| < 1.4e8``), far inside
+    DECIMAL(30,6), so no separate magnitude test is needed. Near-ties,
+    larger values, NaN, +-Inf and NULL take the slow path, the cast
+    itself, and behave exactly as it does.
+    """
+    w = c * float(_SCALE)
+    r = F.rint(w)
+    fast = F.abs(w - r) + F.abs(w) * 2.0**-48 < 0.5
+    return F.when(fast, r.cast("bigint").cast("decimal(36,0)")).otherwise(
+        (c.cast("decimal(30,6)") * _SCALE).cast("decimal(36,0)")
+    )
+
+
+def exact_sum(c: Column) -> Column:
+    """Exact, order-independent sum of a double column, returned as
+    double: equal bit for bit to ``CAST(CAST(SUM(CAST(c AS
+    DECIMAL(30,6))) AS STRING) AS DOUBLE)``.
+
+    Rows add as :func:`exact_unscaled` integers in a DECIMAL(38,0),
+    which overflows at the same 1e32 as the DECIMAL(38,6) sum of
+    DECIMAL(30,6). Each output group divides by 10^6 once, then takes
+    the decimal -> string -> double step of ``queries._util.dsum``.
+    """
+    return (F.sum(exact_unscaled(c)) / _SCALE).cast("string").cast("double")
+
+
 def group_by(
     df: DataFrame,
     keys: Sequence[str | Column],

@@ -13,41 +13,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cubert_spark.operators.groupby import exact_sum
 
-def sparse_matmul(
-    a: DataFrame,
-    b: DataFrame,
-    acc_type: str = "decimal(30,6)",
-) -> DataFrame:
+
+def sparse_matmul(a: DataFrame, b: DataFrame) -> DataFrame:
     """C = A x B for COO matrices with columns (i, j, v).
 
-    The accumulation runs in DECIMAL by default: exact, and therefore
-    independent of partial-aggregation order (floating sums would vary
-    run to run at scale). The final decimal->double cast routes
-    through the decimal's string so the double is bit-identical across
-    engines at any magnitude (the r13 dsum rule, queries/_util.py).
+    The accumulation is the exact DECIMAL(30,6) sum of
+    ``operators.groupby.exact_sum``: exact, and therefore independent
+    of partial-aggregation order (floating sums would vary run to run
+    at scale), and bit-identical across engines at any magnitude.
     Shuffles: one on the inner dimension (the join), one on (i, j)
     for the final sum — broadcast the small side to drop to one.
     """
     al = a.select(F.col("i"), F.col("j").alias("k"), F.col("v").alias("va"))
     bl = b.select(F.col("i").alias("k"), F.col("j"), F.col("v").alias("vb"))
-    prod = al.join(bl, "k").select(
-        "i", "j", (F.col("va") * F.col("vb")).cast(acc_type).alias("p")
-    )
-    return prod.groupBy("i", "j").agg(
-        F.sum("p").cast("string").cast("double").alias("v")
+    return (
+        al.join(bl, "k")
+        .groupBy("i", "j")
+        .agg(exact_sum(F.col("va") * F.col("vb")).alias("v"))
     )
 
 
-def vector_block_multiply(
-    matrix: DataFrame, vector: DataFrame, acc_type: str = "decimal(30,6)"
-) -> DataFrame:
+def vector_block_multiply(matrix: DataFrame, vector: DataFrame) -> DataFrame:
     """y = A x v for COO matrix (i, j, v) and vector (j, v) — the
     CollateVectorBlock use case. Vector broadcasts when small."""
     vl = F.broadcast(vector.select(F.col("j"), F.col("v").alias("vx")))
-    prod = matrix.join(vl, "j").select(
-        "i", (F.col("v") * F.col("vx")).cast(acc_type).alias("p")
-    )
-    return prod.groupBy("i").agg(
-        F.sum("p").cast("string").cast("double").alias("v")
+    return (
+        matrix.join(vl, "j")
+        .groupBy("i")
+        .agg(exact_sum(F.col("v") * F.col("vx")).alias("v"))
     )
