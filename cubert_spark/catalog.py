@@ -520,7 +520,6 @@ def tx_commit(
     meta: dict | Callable[[], dict] | None = None,
     retries: int = 0,
     abort_if=None,
-    on_conflict: str = "fail",
 ) -> int:
     """Commit ``df`` to a versioned table (the public Delta-lake /
     Iceberg snapshot idea in its minimal parquet-native form — no
@@ -547,23 +546,11 @@ def tx_commit(
       re-read the new head, recompute the file list as head's files
       plus ours, and re-attempt the link at the next version. No
       parquet is rewritten and both writers' rows land in a linear
-      version chain. **Overwrite** conflicts surface to the caller by
-      default even with retries: "replace the table" racing "replace
-      the table" is a semantic conflict (one writer's intent would be
-      silently discarded), not an ordering problem.
-    - ``on_conflict`` (overwrite mode only) makes that policy
-      explicit: ``"fail"`` (default) raises ``TxConflictError`` on a
-      lost overwrite race; ``"last_writer_wins"`` OPTS IN to
-      resolving it by re-linking this commit's file set at the next
-      version — the loser becomes the new head, superseding the other
-      writer's table state (which stays in the chain for
-      ``tx_read(version=...)`` time travel — nothing is destroyed,
-      the discard is of headship, not data). Because LWW can discard
-      another writer's intent, it demands an explicit retry budget:
-      ``retries >= 1`` is required with it (ValueError otherwise),
-      and the budget bounds how many lost races are resolved before
-      surfacing. ``abort_if`` is still re-checked before every
-      attempt, so exactly-once callers keep their guard under LWW.
+      version chain. An **overwrite** conflict always raises
+      ``TxConflictError``, whatever ``retries`` says: "replace the
+      table" racing "replace the table" is a semantic conflict (one
+      writer's intent would be silently discarded), not an ordering
+      problem. The caller decides whether to re-read and retry.
     - ``abort_if`` (zero-arg callable) is re-evaluated at the top of
       EVERY publish attempt, after the head re-read would happen:
       returning True abandons the commit, deletes this attempt's data
@@ -587,21 +574,6 @@ def tx_commit(
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tx_commit: unknown mode {mode!r}")
-    if on_conflict not in ("fail", "last_writer_wins"):
-        raise ValueError(f"tx_commit: unknown on_conflict {on_conflict!r}")
-    if on_conflict == "last_writer_wins":
-        if mode != "overwrite":
-            raise ValueError(
-                "tx_commit: on_conflict='last_writer_wins' applies to "
-                "overwrite commits only (append conflicts rebase "
-                "losslessly via retries=)"
-            )
-        if int(retries) < 1:
-            raise ValueError(
-                "tx_commit: on_conflict='last_writer_wins' can discard "
-                "another writer's headship — pass an explicit retries>=1 "
-                "budget to opt in"
-            )
     _txlog_dir(path)  # validate the local-path contract BEFORE writing data
     # attempt-unique data dir: a commit that died after writing data
     # but before the manifest rename leaves only an orphan directory
@@ -660,22 +632,14 @@ def tx_commit(
             # writers' rows end up in one linear chain. An overwrite
             # conflict is semantic (two "replace the table" intents)
             # and always surfaces.
-            # Overwrite + last_writer_wins: re-link OUR file set at the
-            # next version — the overwrite intent is "replace whatever
-            # is there", so replaying it on top of the new head is the
-            # policy the caller opted into. The superseded version
-            # stays readable via tx_read(version=...).
-            resolvable = mode == "append" or on_conflict == "last_writer_wins"
-            if resolvable and attempts_left > 0:
+            if mode == "append" and attempts_left > 0:
                 attempts_left -= 1
                 continue
             raise TxConflictError(
                 f"tx_commit conflict: version {n} of {path} was committed "
                 f"concurrently; this commit's data ({attempt}) is an orphan "
                 "(vacuumable). Re-read the log and retry against the new "
-                "head (append commits may pass retries= to auto-rebase; "
-                "overwrite commits may opt into "
-                "on_conflict='last_writer_wins')."
+                "head (append commits may pass retries= to auto-rebase)."
             ) from None
         finally:
             os.unlink(tmp)

@@ -19,6 +19,34 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+#: SEQNO (SeqNo.java:34-43): a DENSE 1-based per-JVM counter (static
+#: `seqno = 1`, incremented per eval; separate map tasks each restart
+#: at 1, so values repeat ACROSS tasks — only within one JVM are they
+#: non-overlapping). Spark spelling with the same semantics and zero
+#: shuffle: monotonically_increasing_id() is
+#: (partition_id << 33) | row_in_partition, so its low 33 bits are
+#: exactly the dense 0-based row counter of the task — mask + 1
+#: reproduces the dense 1-based per-task sequence (pytest-pinned in
+#: test_schema_functions.test_seqno_dense_per_task). For a globally
+#: UNIQUE (non-dense) id use UNIQUEID. The .cmr frontend emits this
+#: text for both of its SEQNO() spellings.
+SEQNO_SQL = f"((monotonically_increasing_id() & {(1 << 33) - 1}) + 1)"
+
+
+def full_match_regex(pattern: str) -> str:
+    """MATCHES is a FULL-string match (Match.java:37 /
+    CompiledRegex.matches()); Spark's RLIKE/regexp_like is find(), so
+    the pattern is anchored."""
+    return f"^(?:{pattern})$"
+
+
+def _matches(a: Column, pat: str | Column) -> Column:
+    if isinstance(pat, Column):
+        # regexp_like accepts a Column pattern (rlike wants str)
+        return F.regexp_like(a, F.concat(F.lit("^(?:"), pat, F.lit(")$")))
+    return F.regexp_like(a, F.lit(full_match_regex(pat)))
+
+
 def _is_distinct(df_cols: list[Column], order: list[Column]) -> Column:
     """First-seen flag per distinct key under an explicit order."""
     return F.row_number().over(Window.partitionBy(*df_cols).orderBy(*order)) == 1
@@ -56,8 +84,7 @@ BUILTINS: dict[str, Callable[..., Column]] = {
     "CASTTOSTRING": lambda a: a.cast("string"),
     # misc
     "NVL": F.coalesce,  # Nvl.java:30
-    # Match.java:37 — regexp_like accepts a Column pattern (rlike wants str)
-    "MATCHES": lambda a, pat: F.regexp_like(a, pat if isinstance(pat, Column) else F.lit(pat)),
+    "MATCHES": _matches,  # Match.java:37
     "CONCAT": F.concat,  # Concat.java:34
     # SIZEOF (Sizeof.java:33): bag/map size; for strings use LENGTH
     # (dispatch is static in Spark's analyzer, so the string case is a
@@ -66,19 +93,7 @@ BUILTINS: dict[str, Callable[..., Column]] = {
     "LENGTH": F.length,
     "TOBYTEARRAY": lambda a: F.encode(a.cast("string"), "UTF-8"),  # ToByteArray.java:32
     "UNIQUEID": lambda: F.monotonically_increasing_id(),  # UniqueId.java:32
-    # SEQNO (SeqNo.java:34-43): a DENSE 1-based per-JVM counter
-    # (static `seqno = 1`, incremented per eval; separate map tasks
-    # each restart at 1, so values repeat ACROSS tasks — only within
-    # one JVM are they non-overlapping). Spark spelling with the same
-    # semantics and zero shuffle: monotonically_increasing_id() is
-    # (partition_id << 33) | row_in_partition, so its low 33 bits are
-    # exactly the dense 0-based row counter of the task — mask + 1
-    # reproduces the dense 1-based per-task sequence (pytest-pinned in
-    # test_schema_functions.test_seqno_dense_per_task). For a globally UNIQUE
-    # (non-dense) id use UNIQUEID.
-    "SEQNO": lambda: F.monotonically_increasing_id().bitwiseAND(
-        F.lit((1 << 33) - 1)
-    ) + F.lit(1),
+    "SEQNO": lambda: F.expr(SEQNO_SQL),  # SeqNo.java:34-43
 }
 
 

@@ -51,6 +51,36 @@ def maintain_join(
     return j_old.unionByName(join_delta(a_old, b_old, d_a, d_b, on))
 
 
+def _manifest_diff(path: str, from_version: int, to_version: int | None):
+    """``(to_v, inserted, retracted)`` between two committed versions
+    of a tx table, from the MANIFESTS ONLY: ``to_v`` resolves a None
+    ``to_version`` to the head, ``inserted`` lists the files the ``to``
+    snapshot has that ``from`` lacks, ``retracted`` the files ``from``
+    had that ``to`` dropped. Append commits never drop files, so an
+    append-only range has an empty ``retracted``; an overwrite drops
+    files from the manifest but never deletes them from disk (the
+    immutable-data-file discipline of Delta/Iceberg), so retracted rows
+    stay scannable."""
+    from cubert_spark import catalog
+
+    f_from = catalog.tx_files(path, from_version)
+    to_v = (
+        catalog.tx_versions(path)[-1] if to_version is None else to_version
+    )
+    if to_v < from_version:
+        raise ValueError(
+            f"{path}: to_version v{to_v} precedes from_version "
+            f"v{from_version}"
+        )
+    f_to = catalog.tx_files(path, to_v)
+    s_from, s_to = set(f_from), set(f_to)
+    return (
+        to_v,
+        [f for f in f_to if f not in s_from],
+        [f for f in f_from if f not in s_to],
+    )
+
+
 def tx_delta(
     spark,
     path: str,
@@ -77,26 +107,14 @@ def tx_delta(
     whose schema mismatches the base read and unionByName raises —
     pass True to null-pad across evolved commits, exactly like
     tx_read."""
-    from cubert_spark import catalog
-
-    f_from = set(catalog.tx_files(path, from_version))
-    to_v = (
-        catalog.tx_versions(path)[-1] if to_version is None else to_version
-    )
-    if to_v < from_version:
-        raise ValueError(
-            f"tx_delta: to_version v{to_v} precedes from_version "
-            f"v{from_version}"
-        )
-    f_to = catalog.tx_files(path, to_v)
-    if not f_from <= set(f_to):
+    to_v, ins, ret = _manifest_diff(path, from_version, to_version)
+    if ret:
         raise ValueError(
             f"tx_delta: {path} v{from_version}->v{to_v} is not append-only "
             "(an overwrite dropped files); incremental maintenance is "
             "undefined — run a full refresh"
         )
-    new = [f for f in f_to if f not in f_from]
-    return _read_files(spark, path, new, to_v, merge_schema)
+    return _read_files(spark, path, ins, to_v, merge_schema)
 
 
 def _read_files(spark, path: str, files: list, schema_version: int,
@@ -125,30 +143,13 @@ def tx_delta_rw(
     merge_schema: bool = False,
 ):
     """General commit-chain delta as an (inserted, retracted) pair of
-    frames, from MANIFESTS ONLY: inserted = rows in files the ``to``
-    snapshot has that ``from`` lacks, retracted = rows in files the
-    ``from`` snapshot had that ``to`` dropped (overwrite commits drop
-    files from the manifest but never delete them from disk — the
-    same immutable-data-file discipline as Delta/Iceberg — so the
-    retracted rows remain scannable). Append-only ranges come back
-    with an empty retract side, making this a strict generalization
-    of ``tx_delta``; cost stays proportional to the CHANGED files,
-    never the table."""
-    from cubert_spark import catalog
-
-    f_from = catalog.tx_files(path, from_version)
-    to_v = (
-        catalog.tx_versions(path)[-1] if to_version is None else to_version
-    )
-    if to_v < from_version:
-        raise ValueError(
-            f"tx_delta_rw: to_version v{to_v} precedes from_version "
-            f"v{from_version}"
-        )
-    f_to = catalog.tx_files(path, to_v)
-    s_from, s_to = set(f_from), set(f_to)
-    ins = [f for f in f_to if f not in s_from]
-    ret = [f for f in f_from if f not in s_to]
+    frames, from MANIFESTS ONLY (``_manifest_diff``): inserted = rows
+    in files the ``to`` snapshot has that ``from`` lacks, retracted =
+    rows in files the ``from`` snapshot had that ``to`` dropped.
+    Append-only ranges come back with an empty retract side, making
+    this a strict generalization of ``tx_delta``; cost stays
+    proportional to the CHANGED files, never the table."""
+    to_v, ins, ret = _manifest_diff(path, from_version, to_version)
     return (
         _read_files(spark, path, ins, to_v, merge_schema),
         _read_files(spark, path, ret, from_version, merge_schema),
@@ -230,21 +231,16 @@ def maintain_join_tx(
                             merge_schema=merge_schema)
     b_old = catalog.tx_read(spark, b_path, version=b_from,
                             merge_schema=merge_schema)
-    d_a_ins, d_a_ret = tx_delta_rw(spark, a_path, a_from, a_to, merge_schema)
-    d_b_ins, d_b_ret = tx_delta_rw(spark, b_path, b_from, b_to, merge_schema)
-
-    # route on the MANIFESTS (tiny JSON reads), not on the data: an
-    # append-only range keeps the insert-only plan with no exceptAll
-    # stages at all
-    def _has_retracts(path, lo, hi):
-        f_lo = set(catalog.tx_files(path, lo))
-        hi_v = catalog.tx_versions(path)[-1] if hi is None else hi
-        return not f_lo <= set(catalog.tx_files(path, hi_v))
-
-    if not _has_retracts(a_path, a_from, a_to) and not _has_retracts(
-        b_path, b_from, b_to
-    ):
+    a_v, a_ins, a_ret = _manifest_diff(a_path, a_from, a_to)
+    b_v, b_ins, b_ret = _manifest_diff(b_path, b_from, b_to)
+    d_a_ins = _read_files(spark, a_path, a_ins, a_v, merge_schema)
+    d_b_ins = _read_files(spark, b_path, b_ins, b_v, merge_schema)
+    # route on the manifest diff: an append-only range keeps the
+    # insert-only plan with no exceptAll stages at all
+    if not a_ret and not b_ret:
         return maintain_join(j_old, a_old, b_old, d_a_ins, d_b_ins, on)
+    d_a_ret = _read_files(spark, a_path, a_ret, a_from, merge_schema)
+    d_b_ret = _read_files(spark, b_path, b_ret, b_from, merge_schema)
     return maintain_join_rw(
         j_old, a_old, b_old, d_a_ins, d_a_ret, d_b_ins, d_b_ret, on
     )

@@ -33,6 +33,8 @@ import subprocess
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cubert_spark.functions.registry import SEQNO_SQL, full_match_regex
+
 # ---------------------------------------------------------------- tokens
 
 _TOKEN_RE = re.compile(
@@ -56,11 +58,12 @@ _FN_MAP = {
     "NVL": "nvl",
     "CONCAT": "concat",
     "SIZEOF": "size",
-    "TOBYTEARRAY": "to_binary",
     "UNIQUEID": "monotonically_increasing_id",
-    # SEQNO is handled as a special case in expr parsing (dense
-    # per-task counter — it rewrites to an expression, not a name)
 }
+
+#: builtins that rewrite to whole expressions, not names
+#: (_Parser._rewrite_call)
+_REWRITTEN_CALLS = ("SEQNO", "TOBYTEARRAY")
 
 
 class ScriptError(ValueError):
@@ -377,8 +380,8 @@ class _Parser:
                 nxt = self.peek()
                 if nxt and nxt.startswith('"'):
                     self.next()
-                    pat = _unquote(nxt).replace("'", "''")
-                    parts.append(f"RLIKE '^(?:{pat})$'")
+                    pat = full_match_regex(_unquote(nxt)).replace("'", "''")
+                    parts.append(f"RLIKE '{pat}'")
                 else:
                     parts.append("RLIKE")
             elif t == "#":
@@ -388,19 +391,8 @@ class _Parser:
                 parts.append(_sql_str(t))
             elif up == "CASE" and self.peek() == "(":
                 parts.append(self._case_expr())
-            elif up == "SEQNO" and self.peek() == "(":
-                # dense 1-based per-task counter (SeqNo.java:34-43;
-                # see functions.registry SEQNO) — the low 33 bits of
-                # monotonically_increasing_id() are the task-local
-                # dense row counter, so SEQNO() rewrites to a full
-                # expression, not a bare function name
-                if self.toks[self.i + 1 : self.i + 2] != [")"]:
-                    raise ScriptError("SEQNO takes no arguments")
-                self.next()  # (
-                self.next()  # )
-                parts.append(
-                    f"((monotonically_increasing_id() & {(1 << 33) - 1}) + 1)"
-                )
+            elif up in _REWRITTEN_CALLS and self.peek() == "(":
+                parts.append(self._rewrite_call(up))
             elif up in _FN_MAP and self.peek() == "(":
                 parts.append(_FN_MAP[up])
             elif t == "$":
@@ -436,17 +428,10 @@ class _Parser:
                         name = self.toks[j]
                         self.i = j + 1
                         parts.pop()  # drop package head; keep class name
-                        if name.upper() == "SEQNO":
+                        if name.upper() in _REWRITTEN_CALLS:
                             # FQCN spelling (…builtin.SeqNo()) gets the
-                            # same dense-counter rewrite as bare SEQNO()
-                            if self.peek(1) != ")":
-                                raise ScriptError("SEQNO takes no arguments")
-                            self.next()  # (
-                            self.next()  # )
-                            parts.append(
-                                "((monotonically_increasing_id() & "
-                                f"{(1 << 33) - 1}) + 1)"
-                            )
+                            # same rewrite as the bare name
+                            parts.append(self._rewrite_call(name.upper()))
                             continue
                         parts.append(_FN_MAP.get(name.upper(), name))
                         continue
@@ -466,6 +451,21 @@ class _Parser:
                 merged.append(parts[i])
                 i += 1
         return " ".join(merged)
+
+    def _rewrite_call(self, name: str) -> str:
+        """``SEQNO()`` / ``TOBYTEARRAY(x)`` as the Spark SQL of their
+        ``functions.registry`` spellings: SEQNO is the dense 1-based
+        per-task counter (``SEQNO_SQL``), TOBYTEARRAY the UTF-8 bytes
+        of ``x`` as a string (ToByteArray.java:32)."""
+        self.expect("(")
+        if name == "SEQNO":
+            if not self.accept(")"):
+                raise ScriptError("SEQNO takes no arguments")
+            return SEQNO_SQL
+        arg = self.expression(stop=(",",))
+        if not arg or not self.accept(")"):
+            raise ScriptError("TOBYTEARRAY takes one argument")
+        return f"encode(string({arg}), 'UTF-8')"
 
     def _case_expr(self) -> str:
         """CASE(c1, v1, c2, v2, ...) -> CASE WHEN c1 THEN v1 ... END
@@ -1336,20 +1336,22 @@ def _run_completion_tasks(spark, job) -> None:
             spark.read.parquet(paths[0]).show(20, truncate=False)
 
 
+#: concurrent .cmr jobs per script (ExecutorService.java:41)
+_MAX_PARALLEL_JOBS = 5
+
+
 def run_script(
     spark: SparkSession,
     text: str,
     params: dict[str, str] | None = None,
     relations: dict[str, DataFrame] | None = None,
     operators: dict | None = None,
-    max_parallel_jobs: int = 5,
 ) -> dict[str, DataFrame]:
     """Execute a .cmr script. Independent jobs run concurrently on a
-    thread pool of ``max_parallel_jobs`` workers (the reference's
-    ExecutorService caps at 5, ExecutorService.java:41); dependent
-    jobs are ordered by the inferred relation/path IO graph. Spark's
-    own scheduler additionally parallelizes stages within each job.
-    ``max_parallel_jobs=1`` degrades to strictly sequential execution.
+    thread pool of ``_MAX_PARALLEL_JOBS`` workers (the reference's
+    ExecutorService cap, ExecutorService.java:41); dependent jobs are
+    ordered by the inferred relation/path IO graph. Spark's own
+    scheduler additionally parallelizes stages within each job.
     Returns the final relation environment."""
     import concurrent.futures as cf
     import threading
@@ -1359,12 +1361,6 @@ def run_script(
     prog = compile_script(text, params)
     jobs = prog["jobs"]
     env: dict[str, DataFrame] = dict(relations or {})
-    if max_parallel_jobs <= 1 or len(jobs) <= 1:
-        for job in jobs:
-            env = run_plan(spark, job, env, operators=operators)
-            _run_completion_tasks(spark, job)
-        return env
-
     deps = job_dependencies(jobs)
     lock = threading.Lock()
     done: set[int] = set()
@@ -1386,16 +1382,16 @@ def run_script(
                     env[k] = v
             done.add(idx)
 
-    with cf.ThreadPoolExecutor(max_workers=max_parallel_jobs) as pool:
+    with cf.ThreadPoolExecutor(max_workers=_MAX_PARALLEL_JOBS) as pool:
         pending = set(range(len(jobs)))
         running: dict[cf.Future, int] = {}
+        # job_dependencies links a job only to EARLIER jobs, so once
+        # nothing runs the lowest pending job is ready: no cycle stalls
         while pending or running:
             ready = [i for i in sorted(pending) if deps[i] <= done]
             for i in ready:
                 pending.discard(i)
                 running[pool.submit(run_one, i)] = i
-            if not running:
-                raise ScriptError("job dependency cycle detected")
             fs = cf.wait(
                 list(running), return_when=cf.FIRST_COMPLETED
             ).done

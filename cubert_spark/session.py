@@ -39,9 +39,6 @@ SCALE_DEFAULTS: dict[str, str] = {
     # DuckDB/Arrow semantics) — Spark has no nanos timestamp type.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
-    # Python DataSources (cubert_avro) evaluate simple predicates
-    # inside the reader, before the Arrow hand-off.
-    "spark.sql.python.filterPushdown.enabled": "true",
     # Keep partition sizes bounded so a 100 TB scan produces sane tasks.
     "spark.sql.files.maxPartitionBytes": "134217728",
     # Broadcast threshold: small dimension tables (region/nation/dicts)

@@ -34,14 +34,7 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceWriter,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
     InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -192,8 +185,6 @@ class AvroDataSource(DataSource):
         # splits keep every core fed (measured 8x on a single 11MB
         # file on local[16])
         split_size = int(self.options.get("splitSize", 16 << 20))
-        if str(self.options.get("filterPushdown", "false")).lower() == "true":
-            return _AvroPushdownReader(self._paths(), schema, split_size)
         return _AvroReader(self._paths(), schema, split_size)
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
@@ -249,12 +240,6 @@ class _AvroReader(DataSourceReader):
                 self.arrow_schema = to_arrow_schema(schema)
             except Exception:  # noqa: BLE001 - optional fast path
                 self.arrow_schema = None
-        self._schema = schema
-        self._col_idx = {f.name: i for i, f in enumerate(schema.fields)}
-        self._pushed = []  # (col_index, predicate) applied during read
-
-    def _keep(self, row) -> bool:
-        return all(pred(row[idx]) for idx, pred in self._pushed)
 
     def partitions(self):
         # files larger than splitSize scan as multiple byte-range
@@ -285,8 +270,6 @@ class _AvroReader(DataSourceReader):
             start=partition.start,
             end=partition.end,
         )
-        if self._pushed:
-            rows = (r for r in rows if self._keep(r))
         if self.arrow_schema is None:
             yield from rows
             return
@@ -309,79 +292,6 @@ def _rows_to_batch(rows, sch, pa):
         pa.array(list(c), type=f.type) for c, f in zip(cols, sch)
     ]
     return pa.RecordBatch.from_arrays(arrays, schema=sch)
-
-
-class _AvroPushdownReader(_AvroReader):
-    """Opt-in (``option("filterPushdown", "true")``) reader that
-    evaluates simple comparison/null predicates inside the Python
-    reader — rows failing them drop after decode, BEFORE the Arrow
-    hand-off, so an ingest-with-WHERE scan ships only matching rows
-    to the JVM.
-
-    Opt-in because of a planner footgun (probed on Spark 4.1): the
-    JVM caches the planned scan per DataFrame instance, so the FIRST
-    query's pushed filters get baked into every later query on the
-    same DataFrame object. Safe usage is one DataFrame per filtered
-    query (``spark.read...load(p).filter(...)``); the default reader
-    does not implement pushFilters at all, so ordinary reads are
-    never exposed. Requires
-    ``spark.sql.python.filterPushdown.enabled`` (set by the session
-    factory)."""
-
-    #: Column types whose Python comparison semantics provably match
-    #: Spark SQL's: integers, strings, booleans, binary (both compare
-    #: bytes unsigned-lexicographically), dates, and naive
-    #: timestamp_ntz. Floats are EXCLUDED (Spark orders NaN greater
-    #: than every double and NaN = NaN is true; Python NaN compares
-    #: false) as are tz-aware timestamps (Spark hands tz-aware
-    #: literals, rows are naive) and complex types.
-    _PUSHABLE_TYPES = (
-        "byte", "short", "integer", "long", "string", "boolean",
-        "binary", "date", "timestamp_ntz",
-    )
-    _PUSHABLE_LITERALS = (int, str, bool, bytes)
-
-    def pushFilters(self, filters):
-        import datetime as dt
-        import operator as op
-
-        # a planning pass owns exactly its own filters
-        self._pushed = []
-        comparators = {
-            EqualTo: op.eq,
-            GreaterThan: op.gt,
-            GreaterThanOrEqual: op.ge,
-            LessThan: op.lt,
-            LessThanOrEqual: op.le,
-        }
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            if attr is None or len(attr) != 1 or attr[0] not in self._col_idx:
-                yield f
-                continue
-            idx = self._col_idx[attr[0]]
-            if isinstance(f, IsNull):
-                self._pushed.append((idx, lambda v: v is None))
-            elif isinstance(f, IsNotNull):
-                self._pushed.append((idx, lambda v: v is not None))
-            elif (
-                type(f) in comparators
-                and self._schema.fields[idx].dataType.typeName()
-                in self._PUSHABLE_TYPES
-                and (
-                    isinstance(f.value, self._PUSHABLE_LITERALS)
-                    or (
-                        isinstance(f.value, (dt.date, dt.datetime))
-                        and getattr(f.value, "tzinfo", None) is None
-                    )
-                )
-            ):
-                cmp, val = comparators[type(f)], f.value
-                self._pushed.append(
-                    (idx, lambda v, c=cmp, x=val: v is not None and c(v, x))
-                )
-            else:
-                yield f
 
 
 @dataclass

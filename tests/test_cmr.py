@@ -603,6 +603,53 @@ END
     assert deps[3] == {1}            # reads b's relation y
 
 
+def test_builtins_agree_with_functions_call(spark):
+    """TOBYTEARRAY (UTF-8 bytes of the string form), MATCHES (a
+    full-string match) and SEQNO (the dense per-task counter) give the
+    same values through a .cmr GENERATE as through functions.call on
+    the same rows: 'xaby' is not a full match of "ab", and it is not
+    hex either."""
+    from pyspark.sql import functions as F
+
+    from cubert_spark.functions import call
+
+    words = ["abc", "xaby", "ab", "", None, "AB", "abab", "é"]
+    d = spark.range(0, 40, 1, 4).withColumn(
+        "s",
+        F.element_at(
+            F.array(*[F.lit(w) for w in words]),
+            (F.col("id") % len(words) + 1).cast("int"),
+        ),
+    )
+    env = run_script(
+        spark,
+        """
+    JOB "builtins"
+      REDUCE {
+        g = FROM d GENERATE id, TOBYTEARRAY(s) AS b, TOBYTEARRAY(id) AS bi,
+            s MATCHES "ab" AS m1, s MATCHES "a.*" AS m2,
+            SEQNO() AS q;
+      }
+    END
+    """,
+        relations={"d": d},
+    )
+    want = d.select(
+        "id",
+        call("TOBYTEARRAY", F.col("s")).alias("b"),
+        call("TOBYTEARRAY", F.col("id")).alias("bi"),
+        call("MATCHES", F.col("s"), "ab").alias("m1"),
+        call("MATCHES", F.col("s"), F.lit("a.*")).alias("m2"),
+        call("SEQNO").alias("q"),
+    )
+    got = sorted(map(tuple, env["g"].collect()))
+    assert got == sorted(map(tuple, want.collect()))
+    by_id = {r[0]: r for r in got}
+    assert by_id[1][1] == b"xaby" and by_id[1][3] is False  # 'xaby'
+    assert by_id[2][3] is True and by_id[6][3] is False  # 'ab', 'abab'
+    assert by_id[7][1] == "é".encode()
+
+
 def test_independent_jobs_overlap(spark, tmp_path):
     """Two IO-disjoint jobs must overlap in wall time on the thread
     pool (ExecutorService.java:41 parity), and dependent jobs must
@@ -643,7 +690,7 @@ END
 
     with mock.patch.object(plan_mod, "run_plan", traced), \
          mock.patch("cubert_spark.script.cmr.run_plan", traced, create=True):
-        env = run_script(spark, script, max_parallel_jobs=4)
+        env = run_script(spark, script)
     assert env["j"].count() == 5
     (l0, l1), (r0, r1) = spans["left"], spans["right"]
     assert max(l0, r0) < min(l1, r1), f"no overlap: {spans}"

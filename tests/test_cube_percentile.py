@@ -106,6 +106,28 @@ def test_skewed_dim_keys(spark, grouper):
     _two_level_vs_one_level(spark.createDataFrame(rows, SCHEMA).repartition(4), grouper)
 
 
+@pytest.mark.parametrize(
+    "specs",
+    [SPECS, (("SUM", "v", "s"), ("COUNT", "*", "n"))],
+    ids=["two_level", "one_level"],
+)
+def test_reject_null_dims(spark, specs):
+    """``cube(reject_null_dims=True)`` is the reference's rule
+    (CubeDimensions.java:234-236): a NULL in any dimension raises, a
+    NULL measure does not, and input without NULL dimensions gives the
+    same rows as the default cube."""
+    clean = spark.createDataFrame(
+        [("a", 1, 1.0), ("a", 2, None), ("b", 1, 3.0), ("b", 1, 5.0)], SCHEMA
+    ).repartition(2)
+    got = _rows(cube(clean, ["d1", "d2"], *specs, reject_null_dims=True))
+    assert got == _rows(cube(clean, ["d1", "d2"], *specs))
+    assert len(got) == 8  # cuboids: 3 (d1, d2) + 2 (d1) + 2 (d2) + 1 ()
+    for bad in (("a", None, 1.0), (None, 1, 1.0)):
+        df = spark.createDataFrame([("a", 1, 1.0), bad], SCHEMA)
+        with pytest.raises(Exception, match="null dimension value"):
+            cube(df, ["d1", "d2"], *specs, reject_null_dims=True).collect()
+
+
 def test_integral_measure_and_rollup_of_the_measure(spark):
     """An integral measure, and a measure that is also a dimension."""
     rows = [(i % 3, i % 5) for i in range(60)]

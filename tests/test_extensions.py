@@ -578,86 +578,6 @@ def test_tx_commit_append_retry_rebases_both_writers_land(
     assert tx_versions(p) == [1, 2, 3]
 
 
-def test_tx_commit_overwrite_last_writer_wins_policy(
-    spark, tmp_path, monkeypatch
-):
-    """Two-writer OVERWRITE interleave (r10 VERDICT task 7): the
-    default policy fails (covered above); on_conflict=
-    'last_writer_wins' + an explicit retries budget resolves the race
-    by re-linking the loser's file set at the next version — the
-    loser becomes the new head, the superseded snapshot stays
-    time-travelable, and the opt-in is guarded (retries>=1 required;
-    append mode rejects the flag)."""
-    import pytest
-
-    from cubert_spark import catalog
-    from cubert_spark.catalog import (
-        TxConflictError,
-        tx_commit,
-        tx_read,
-        tx_versions,
-    )
-
-    p = str(tmp_path / "tx")
-    tx_commit(spark.range(0, 10).withColumnRenamed("id", "k"), p)
-    # writer A overwrites at version 2
-    tx_commit(
-        spark.range(50, 55).withColumnRenamed("id", "k"), p, mode="overwrite"
-    )
-    # writer B raced A (stale head for its first attempt only)
-    real = catalog.tx_versions
-    calls = {"n": 0}
-
-    def stale_once(path):
-        calls["n"] += 1
-        return [1] if calls["n"] == 1 else real(path)
-
-    monkeypatch.setattr(catalog, "tx_versions", stale_once)
-    v = tx_commit(
-        spark.range(100, 103).withColumnRenamed("id", "k"), p,
-        mode="overwrite", retries=1, on_conflict="last_writer_wins",
-    )
-    monkeypatch.undo()
-    # B re-applied its replace-the-table intent on top of A: v3 head
-    assert v == 3 and tx_versions(p) == [1, 2, 3]
-    assert sorted(r["k"] for r in tx_read(spark, p).collect()) == [100, 101, 102]
-    # A's superseded snapshot is discarded from headship, NOT destroyed
-    assert sorted(r["k"] for r in tx_read(spark, p, 2).collect()) == list(
-        range(50, 55)
-    )
-
-    # the budget bounds resolution: two lost races > retries=1 surfaces
-    calls["n"] = 0
-
-    def always_stale(path):
-        return [1]
-
-    monkeypatch.setattr(catalog, "tx_versions", always_stale)
-    with pytest.raises(TxConflictError):
-        tx_commit(
-            spark.range(5).withColumnRenamed("id", "k"), p,
-            mode="overwrite", retries=2, on_conflict="last_writer_wins",
-        )
-    monkeypatch.undo()
-
-    # guarded opt-in: LWW without a retry budget, or on append, rejects
-    with pytest.raises(ValueError, match="retries>=1"):
-        tx_commit(
-            spark.range(5).withColumnRenamed("id", "k"), p,
-            mode="overwrite", on_conflict="last_writer_wins",
-        )
-    with pytest.raises(ValueError, match="overwrite commits only"):
-        tx_commit(
-            spark.range(5).withColumnRenamed("id", "k"), p,
-            mode="append", retries=1, on_conflict="last_writer_wins",
-        )
-    with pytest.raises(ValueError, match="unknown on_conflict"):
-        tx_commit(
-            spark.range(5).withColumnRenamed("id", "k"), p,
-            mode="overwrite", on_conflict="first_writer_wins",
-        )
-
-
 def test_tx_commit_abort_if_keeps_exactly_once_under_rebase(
     spark, tmp_path, monkeypatch
 ):
